@@ -842,10 +842,16 @@ object Dedup {
       // ⌊0.20005·sz_a⌋) can lack at most m from B, so it MUST collide
       // on ≥ p − ⌊0.20005·sz_a⌋ prefix shingles — a pigeonhole proof,
       // not a heuristic (integer arithmetic, no float boundary). The
+      // bound is 1 at sz_a = 1, exactly 2 for 2 ≤ sz_a ≤ 4003 and
+      // never above 2; past
+      // that the two floors drift apart, so it dips to 1 (from 4004),
+      // to 0 (from 24004), and is ≤ 0 for every sz_a ≥ 39996, where
+      // the filter prunes nothing. Recall is exact in every regime —
+      // a weaker bound only keeps more candidates. The
       // r18 StageMetrics profile showed 361,350 probe-collision rows
       // for 350,932 distinct candidates — i.e. ~97% of candidates
       // share exactly ONE prefix shingle while the bound demands ≥ 2
-      // for every sz_a ≥ 1 — and the verify expansion over those
+      // in that 2..4003 range — and the verify expansion over those
       // candidates (17.3M rows, ~13.5 of the stage's 14.1 cumulative
       // task-seconds) was 99.997% waste for 512 result rows. The
       // distinct becomes the equivalent count aggregate (same shuffle)

@@ -59,8 +59,6 @@ object AsOfJoin {
     * both key columns and compares them lexicographically, no struct,
     * no interpreted ordering (round-11 verdict item 4; the previous
     * round always dropped composite keys to the generic merge).
-    * `spark.graft.asof.twoKeyFastPath=false` pins the struct path so
-    * tests can differential the two on identical inputs.
     *
     * Any other composite (3+ keys, or a non-long-backed column) zips
     * the key lists into a single struct key per side — struct
@@ -89,9 +87,7 @@ object AsOfJoin {
     val fastOk = leftKeys.size == 2 &&
       leftKeys.forall(isLongBacked(left, _)) &&
       rightKeys.forall(isLongBacked(right, _)) &&
-      isLongBacked(left, leftTime) && isLongBacked(right, rightTime) &&
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.asof.twoKeyFastPath", "true") == "true"
+      isLongBacked(left, leftTime) && isLongBacked(right, rightTime)
     if (fastOk)
       return build(left, right, leftKeys.head, rightKeys.head, leftTime,
         rightTime, rightTie, direction, tolerance,
@@ -271,11 +267,9 @@ object AsOfJoin {
     // from the LEFT side's types — silently wrong matches on type drift
     // unless rejected here. Mixed types WITHIN the long-backed integral
     // family (int key vs bigint key — warehouse schema drift) are fine:
-    // the primitive/codegen paths widen each side independently, and
-    // AsOfJoinExec routes such pairs to the primitive path even under
-    // the forceInterpreted test knob. Shape compare ignores nullability
-    // and struct field NAMES (byKeys builds struct keys from
-    // differently-named columns on each side).
+    // the primitive/codegen paths widen each side independently.
+    // Shape compare ignores nullability and struct field NAMES (byKeys
+    // builds struct keys from differently-named columns on each side).
     // Cross-type pairs are only safe when both sides' PHYSICAL values
     // mean the same thing: pure integer counts widen losslessly, and
     // TimestampType/TimestampNTZType share the epoch-µs representation

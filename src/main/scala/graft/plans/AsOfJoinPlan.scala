@@ -133,27 +133,20 @@ object AsOfDirection {
   * the no-left-exchange [[BroadcastAsOfJoinExec]]; anything bigger — or
   * any non-long-backed shape, e.g. byKeys struct keys — plans the
   * co-partitioned sort-merge [[AsOfJoinExec]]. The same query can
-  * broadcast at one SF and merge at 100× — that's the point.
-  * `spark.graft.asof.broadcast` = auto (default) | never | force
-  * overrides the stats decision (force still requires the long-backed
-  * shapes — there is no generic broadcast path to fall to). */
+  * broadcast at one SF and merge at 100× — that's the point. The
+  * threshold is the only switch: `-1` pins the merge, exactly as it
+  * disables Spark's own broadcast joins. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
-      val conf = org.apache.spark.sql.internal.SQLConf.get
-      val mode = conf.getConfString("spark.graft.asof.broadcast", "auto")
       // the broadcast index is single-key (two-key composites stay on
       // the merge — their call sites are fact-fact self-joins anyway)
       val shapesOk = p.leftKey2.isEmpty &&
         Seq(p.leftKey, p.rightKey, p.leftTime, p.rightTime, p.rightTie)
           .forall(e => AsOfJoinExec.isLongBacked(e.dataType))
-      val thr = conf.autoBroadcastJoinThreshold
-      val broadcastIt = mode match {
-        case "never" => false
-        case "force" => shapesOk
-        case _ => shapesOk && thr > 0 && p.right.stats.sizeInBytes <= thr
-      }
-      if (broadcastIt)
+      val thr = org.apache.spark.sql.internal.SQLConf.get
+        .autoBroadcastJoinThreshold
+      if (shapesOk && thr > 0 && p.right.stats.sizeInBytes <= thr)
         BroadcastAsOfJoinExec(planLater(p.left), planLater(p.right),
           p.leftKey, p.rightKey, p.leftTime, p.rightTime, p.rightTie,
           p.dir, p.tolerance) :: Nil
@@ -240,7 +233,7 @@ case class AsOfJoinExec(
   // variables — no per-row UnsafeProjection, no iterator virtual calls,
   // no boxing. Supported for the hot shape (long-backed keys/times as
   // direct attribute refs, i.e. every graft call site); anything else
-  // — and spark.graft.asof.codegen=false — falls back to doExecute's
+  // — and spark.sql.codegen.wholeStage=false — falls back to doExecute's
   // volcano merge, which AsOfJoinSpec differential-tests against this
   // path on identical inputs.
   //
@@ -276,9 +269,7 @@ case class AsOfJoinExec(
     }
   }
 
-  override def supportCodegen: Boolean = primBound.isDefined &&
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.asof.codegen", "true") == "true"
+  override def supportCodegen: Boolean = primBound.isDefined
 
   override def inputRDDs(): Seq[RDD[InternalRow]] = {
     val lRdd = left.execute()
@@ -504,19 +495,7 @@ case class AsOfJoinExec(
     //    an interpreted constant factor per row.
     //  - GENERIC: any other type (string keys, decimals) falls back to
     //    interpreted eval + interpreted ordering, same loop shape.
-    // spark.graft.asof.forceInterpreted=true pins the generic path so
-    // tests can drive both on identical primitive-typed inputs.
-    val forceInterpreted = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.asof.forceInterpreted", "false") == "true"
     val prim = primBound
-    // MIXED-width integral key/time pairs (int vs bigint) widen
-    // correctly on the primitive path but would mis-compare through the
-    // generic path's left-type interpreted ordering — never honor the
-    // forceInterpreted test knob for them. A two-key plan has no
-    // generic twin at all (the struct form is a DIFFERENT plan built by
-    // byKeys), so the knob is ignored there too.
-    val mixedIntegral = leftKey.dataType != rightKey.dataType ||
-      leftTime.dataType != rightTime.dataType || leftKey2.isDefined
     // zipPartitions is safe here: EnsureRequirements satisfied both
     // ClusteredDistributions with compatible same-count partitionings,
     // and under AQE both child exchanges sit in one coalesce group
@@ -539,7 +518,7 @@ case class AsOfJoinExec(
           outRows, matched)
         val rBuf = rIter.buffered
         prim match {
-          case Some(pb) if !forceInterpreted || mixedIntegral =>
+          case Some(pb) =>
             AsOfJoinExec.primitiveMerge(lIter, rBuf, pb, d, tol, emit)
           case None if hasKey2 =>
             // byKeys never builds a key2 plan outside the long-backed

@@ -32,11 +32,11 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport,
   * left-rows × width statistics make the right side's estimate
   * trustworthy): right side under `spark.sql.autoBroadcastJoinThreshold`
   * AND all five key/time/tie columns long-backed → broadcast; otherwise
-  * the co-partitioned merge. `spark.graft.asof.broadcast` = never|force
-  * overrides for tests and for operators who know better. The same
-  * query can therefore plan broadcast at one scale and shuffle at
-  * 100×, exactly like Spark's own join selection — AsOfJoinSpec
-  * differential-tests the two operators on identical inputs.
+  * the co-partitioned merge. The same query can therefore plan
+  * broadcast at one scale and shuffle at 100×, exactly like Spark's
+  * own join selection, and a threshold of `-1` disables it the same
+  * way — AsOfJoinSpec differential-tests the two operators on
+  * identical inputs by moving that threshold.
   *
   * Match semantics are identical to [[AsOfJoinExec]] (backward /
   * forward / nearest, tolerance, plain-join NULL rules, ties by the
@@ -91,11 +91,8 @@ case class BroadcastAsOfJoinExec(
   // consume(). scan -> as-of -> partial agg is ONE generated stage: no
   // iterator breaks, no per-row projection, exactly what the merge
   // exec's codegen already does for the shuffle shape.
+  // `spark.sql.codegen.wholeStage=false` runs doExecute instead.
   // -------------------------------------------------------------------
-
-  override def supportCodegen: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.asof.codegen", "true") == "true"
 
   // binary node: the default needCopyResult throws on 2 children.
   // Output vars are fresh locals (right values read out of stable

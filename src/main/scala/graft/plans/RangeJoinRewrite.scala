@@ -19,7 +19,9 @@ import org.apache.spark.sql.types._
   * Catalyst is meant to be extended
   * (`SparkSessionExtensions.injectOptimizerRule` via
   * [[graft.GraftExtensions]] — injected BEFORE [[ReorderJoinPredicates]]
-  * so bound extraction sees the user's conjunct order).
+  * so bound extraction sees the user's conjunct order). Like any
+  * optimizer rule it is switched off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.RangeJoinRewrite`.
   *
   * Two shapes are recognized, tried in order:
   *  - POINT-IN-INTERVAL: `lo <= t <= hi`, `t` from one side, both
@@ -49,9 +51,8 @@ import org.apache.spark.sql.types._
   *     statistic, not a knob): for genuinely variable-length
   *     intervals the rule runs one bounded planning-time job per
   *     distinct (interval child, bounds) shape — median interval
-  *     length over a `spark.graft.rangeJoin.sampleRows` (default
-  *     20k) row prefix, memoized per JVM — and bands at W ≈ that
-  *     median: typical rows span ~2 bins, heavy-tail rows hit the
+  *     length over a 20k-row prefix, memoized per JVM — and bands at
+  *     W ≈ that median: typical rows span ~2 bins, heavy-tail rows hit the
   *     wide-row cap and route through the sentinel bucket. ANY width
   *     is correct (the original predicate is retained), so sampling
   *     nondeterminism can only move the plan between fast shapes,
@@ -114,7 +115,6 @@ import org.apache.spark.sql.types._
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val EnabledConf = "spark.graft.rangeJoin.enabled"
   private val BinSizeConf = "spark.graft.rangeJoin.binSize"
   private val MaxBinsConf = "spark.graft.rangeJoin.maxBinsPerRow"
 
@@ -188,14 +188,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       .toOption.filter(_ >= 1L)
 
   private val SampleConf = "spark.graft.rangeJoin.sample"
-  private val SampleRowsConf = "spark.graft.rangeJoin.sampleRows"
 
   private def samplingEnabled: Boolean =
     conf.getConfString(SampleConf, "true") == "true"
 
-  private def sampleRows: Int =
-    scala.util.Try(conf.getConfString(SampleRowsConf, "20000").toInt)
-      .toOption.filter(_ >= 1).getOrElse(20000)
+  private val SampleRows = 20000
 
   private val SampleTimeoutConf = "spark.graft.rangeJoin.sampleTimeoutMs"
 
@@ -292,7 +289,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
                 import org.apache.spark.sql.functions.{col, lit, percentile_approx}
                 val med = df.select(len.as("__graft_len"))
                   .filter(col("__graft_len") >= 0L)
-                  .limit(sampleRows)
+                  .limit(SampleRows)
                   .agg(percentile_approx(col("__graft_len"), lit(0.5), lit(1000)))
                   .head()
                 if (med.isNullAt(0)) None
@@ -578,8 +575,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(EnabledConf, "true") != "true") plan
-    else plan.transform {
+    plan.transform {
       case j @ Join(left, right, Inner | Cross, Some(cond), _)
           // batch plans only: a stream-stream range join's state/
           // watermark semantics through an injected Generate are

@@ -84,16 +84,26 @@ class AsOfJoinSpec extends AnyFunSuite {
       v.fold(spark.conf.unset(k))(x => spark.conf.set(k, x)) }
   }
 
-  /** Pin the co-partitioned SORT-MERGE operator: the tiny fixtures in
-    * this suite sit under the broadcast threshold, so with the default
-    * `auto` selection every long-backed test here would silently
-    * exercise [[graft.plans.BroadcastAsOfJoinExec]] instead of the
-    * merge paths the test was written for. */
-  private def mergeOnly[T](body: => T): T =
-    withConf("spark.graft.asof.broadcast" -> "never")(body)
+  /** Operator selection follows Spark's own broadcast threshold. `-1`
+    * pins the co-partitioned SORT-MERGE operator: the tiny fixtures in
+    * this suite sit under the default threshold, so every long-backed
+    * test here would otherwise silently exercise
+    * [[graft.plans.BroadcastAsOfJoinExec]] instead of the merge paths
+    * the test was written for. 1 GiB is far above every right side
+    * here, so it pins the broadcast operator for long-backed shapes. */
+  private val MergePin = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+  private val BroadcastPin = "spark.sql.autoBroadcastJoinThreshold" -> "1g"
+  /** Volcano (doExecute) paths: whole-stage codegen off. */
+  private val NoCodegen = "spark.sql.codegen.wholeStage" -> "false"
 
-  private def broadcastOnly[T](body: => T): T =
-    withConf("spark.graft.asof.broadcast" -> "force")(body)
+  private def mergeOnly[T](body: => T): T = withConf(MergePin)(body)
+
+  private def broadcastOnly[T](body: => T): T = withConf(BroadcastPin)(body)
+
+  /** String keys have no primitive binding, so the merge runs its
+    * interpreted GENERIC loop on the same rows. */
+  private def stringKey(df: DataFrame, key: String): DataFrame =
+    df.withColumn(key, col(key).cast("string"))
 
   for (forward <- Seq(false, true); (nl, nr, seed) <- Seq(
       (300, 300, 1L), (100, 500, 2L), (500, 100, 3L), (50, 0, 4L))) {
@@ -118,8 +128,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       }
       // and the broadcast VOLCANO path (codegen off) — the third
       // executable form of the broadcast operator
-      withConf("spark.graft.asof.broadcast" -> "force",
-          "spark.graft.asof.codegen" -> "false") {
+      withConf(BroadcastPin, NoCodegen) {
         assert(collectPairs(native) == spec,
           "broadcast volcano path diverged")
       }
@@ -168,8 +177,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       broadcastOnly {
         assert(collectPairs(native) == spec, "broadcast operator diverged")
       }
-      withConf("spark.graft.asof.broadcast" -> "force",
-          "spark.graft.asof.codegen" -> "false") {
+      withConf(BroadcastPin, NoCodegen) {
         assert(collectPairs(native) == spec,
           "broadcast volcano path diverged")
       }
@@ -177,20 +185,16 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("nearest: codegen ≡ primitive ≡ interpreted") {
-    val cgKey = "spark.graft.asof.codegen"
-    val interpKey = "spark.graft.asof.forceInterpreted"
     val l = mkSide(41L, 400, "l")
     val r = mkSide(141L, 400, "r")
-    def run(): Set[(Long, Option[Long])] = mergeOnly(collectPairs(
-      AsOfJoin.nearest(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", Some(5L))
-        .select("l_id", "r_id")))
-    val codegen = run()
-    spark.conf.set(cgKey, "false")
-    val primitive = try run() finally spark.conf.unset(cgKey)
-    spark.conf.set(interpKey, "true"); spark.conf.set(cgKey, "false")
-    val interpreted = try run() finally {
-      spark.conf.unset(interpKey); spark.conf.unset(cgKey)
-    }
+    def run(l: DataFrame, r: DataFrame): Set[(Long, Option[Long])] =
+      mergeOnly(collectPairs(
+        AsOfJoin.nearest(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", Some(5L))
+          .select("l_id", "r_id")))
+    val codegen = run(l, r)
+    val primitive = withConf(NoCodegen)(run(l, r))
+    val interpreted = withConf(NoCodegen)(
+      run(stringKey(l, "l_k"), stringKey(r, "r_k")))
     assert(codegen == primitive && primitive == interpreted)
     assert(codegen == collectPairs(nearestSpec(l, r, Some(5L))))
   }
@@ -277,30 +281,25 @@ class AsOfJoinSpec extends AnyFunSuite {
   // Round-10 verdict item 2: the merge now has THREE executable forms —
   // whole-stage CODEGEN (default for long-backed keys/times), the
   // PRIMITIVE unsafe-ordinal volcano loop (codegen disabled), and the
-  // INTERPRETED generic loop (non-long types / forceInterpreted).
-  // Differential-test all three on identical inputs: they must differ
-  // in nothing but the constant factor.
+  // INTERPRETED generic loop (non-long types, here string keys).
+  // Differential-test all three on the same rows: they must differ in
+  // nothing but the constant factor.
   for (forward <- Seq(false, true); tol <- Seq(None, Some(3L))) {
     val dir = if (forward) "forward" else "backward"
     test(s"$dir codegen ≡ primitive ≡ interpreted (tol=$tol)") {
-      val cgKey = "spark.graft.asof.codegen"
-      val interpKey = "spark.graft.asof.forceInterpreted"
       val l = mkSide(71L, 400, "l")
       val r = mkSide(271L, 400, "r")
-      def run(): Set[(Long, Option[Long])] = mergeOnly(collectPairs(
-        (if (forward)
-          AsOfJoin.forward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", tol)
-        else
-          AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", tol))
-          .select("l_id", "r_id")))
-      val codegen = run()
-      spark.conf.set(cgKey, "false")
-      val primitive = try run() finally spark.conf.unset(cgKey)
-      spark.conf.set(interpKey, "true")
-      spark.conf.set(cgKey, "false")
-      val interpreted = try run() finally {
-        spark.conf.unset(interpKey); spark.conf.unset(cgKey)
-      }
+      def run(l: DataFrame, r: DataFrame): Set[(Long, Option[Long])] =
+        mergeOnly(collectPairs(
+          (if (forward)
+            AsOfJoin.forward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", tol)
+          else
+            AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id", tol))
+            .select("l_id", "r_id")))
+      val codegen = run(l, r)
+      val primitive = withConf(NoCodegen)(run(l, r))
+      val interpreted = withConf(NoCodegen)(
+        run(stringKey(l, "l_k"), stringKey(r, "r_k")))
       assert(codegen == primitive)
       assert(primitive == interpreted)
       assert(codegen == collectPairs(windowSpec(l, r, forward, tol)))
@@ -339,8 +338,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     // child's produce loop, so scan -> as-of -> partial agg is ONE
     // generated stage. fallback=false makes a janino failure FAIL the
     // test instead of silently dropping to the volcano path.
-    withConf("spark.sql.codegen.fallback" -> "false",
-        "spark.graft.asof.broadcast" -> "force") {
+    withConf("spark.sql.codegen.fallback" -> "false", BroadcastPin) {
       val l = mkSide(93L, 200, "l")
       val r = mkSide(293L, 200, "r")
       val df = AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id")
@@ -375,21 +373,21 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("mixed INTEGRAL key widths widen correctly; non-integral mismatches reject") {
     // int key joined to bigint key (warehouse schema drift) widens on
-    // the primitive/codegen paths — accepted and correct, even under
-    // the forceInterpreted knob (which is ignored for mixed pairs
-    // because the generic path's left-type ordering would mis-compare)
+    // the primitive/codegen paths — accepted and correct on both the
+    // codegen merge and the volcano primitive loop (with long-backed
+    // times they never reach the generic path, whose left-type
+    // ordering would mis-compare)
     val l = mkSide(63L, 200, "l").withColumn("l_k", col("l_k").cast("int"))
     val r = mkSide(64L, 200, "r")
     val native = mergeOnly(
       collectPairs(AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id")
         .select("l_id", "r_id")))
     assert(native == collectPairs(windowSpec(l, r, forward = false)))
-    spark.conf.set("spark.graft.asof.forceInterpreted", "true")
-    try mergeOnly {
-      val forced = AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id")
+    withConf(MergePin, NoCodegen) {
+      val volcano = AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id")
         .select("l_id", "r_id")
-      assert(collectPairs(forced) == native)
-    } finally spark.conf.unset("spark.graft.asof.forceInterpreted")
+      assert(collectPairs(volcano) == native)
+    }
     // a mismatch OUTSIDE the integral family must fail fast at build —
     // the generic path would silently mis-compare
     val lStr = l.withColumn("l_ks", col("l_k").cast("string"))
@@ -447,8 +445,8 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("tolerance distance check is overflow-safe at extreme time values") {
-   for (mode <- Seq("never", "force"))
-    withConf("spark.graft.asof.broadcast" -> mode) {
+   for (pin <- Seq(MergePin, BroadcastPin))
+    withConf(pin) {
     // Regression (round-10 ADVICE): the bound was checked as
     // `rt <= t + d` / `lmt >= t - d`, whose addition/subtraction can
     // overflow for sentinel-scale times and silently flip the verdict.
@@ -504,15 +502,14 @@ class AsOfJoinSpec extends AnyFunSuite {
     // against a big fact and sort-merge-joins; with honest stats it
     // broadcasts. AQE off so the decision under test is the STATIC
     // estimator's, not a runtime rescue.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
-    val beforeAqe = spark.conf.getOption(aqeKey)
-    val beforeThr = spark.conf.getOption(thrKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(thrKey, (1024 * 1024).toString) // 1 MiB
-    try mergeOnly {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> (1024 * 1024).toString) {
       val l = mkSide(51L, 1000, "l")
-      val r = mkSide(251L, 1000, "r")
+      // the one threshold also selects the as-of operator: a right side
+      // estimated at ~3 MB (200k rows × 32 B) stays over 1 MiB, so the
+      // as-of itself plans the sort-merge operator
+      val r = spark.range(200000).select(col("id").as("r_id"),
+        (col("id") % 10).as("r_k"), (col("id") % 20).as("r_t"))
       // fact side: ~16 MB estimated (2M longs) — over the 1 MiB threshold
       val fact = spark.range(2000000).select(col("id").as("f_k"))
       val asof = AsOfJoin.backward(l, r, "l_k", "r_k", "l_t", "r_t", "r_id")
@@ -526,9 +523,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       assert(bhj.head.collectLeaves().exists(_ => true) && p.collect {
         case a: graft.plans.AsOfJoinExec => a }.nonEmpty,
         "native as-of operator missing from the broadcast plan")
-    } finally {
-      beforeAqe.fold(spark.conf.unset(aqeKey))(v => spark.conf.set(aqeKey, v))
-      beforeThr.fold(spark.conf.unset(thrKey))(v => spark.conf.set(thrKey, v))
     }
   }
 
@@ -672,22 +666,20 @@ class AsOfJoinSpec extends AnyFunSuite {
       assert(collectPairs(native) == specPairs, s"$dirName mismatch")
       // synthetic struct key columns must not leak into the output
       assert(!native.columns.exists(_.startsWith("__graft_asof")))
-      // differential: the struct-key generic path (knob off) must agree
-      // with the fast path row-for-row on the same inputs
-      withConf("spark.graft.asof.twoKeyFastPath" -> "false") {
-        val structPath = AsOfJoin.byKeys(l, r,
-            graft.plans.AsOfDirection.parse(dirName),
-            Seq("l_k1", "l_k2"), Seq("r_k1", "r_k2"), "l_t", "r_t", "r_id")
-          .select("l_id", "r_id")
-        assert(collectPairs(structPath) == specPairs,
-          s"$dirName: struct path diverged from the spec")
-      }
+      // differential: the struct-key generic path must agree with the
+      // fast path row-for-row on the same rows — a string second key is
+      // not long-backed, so byKeys takes the struct path by shape
+      val structPath = AsOfJoin.byKeys(stringKey(l, "l_k2"),
+          stringKey(r, "r_k2"), graft.plans.AsOfDirection.parse(dirName),
+          Seq("l_k1", "l_k2"), Seq("r_k1", "r_k2"), "l_t", "r_t", "r_id")
+        .select("l_id", "r_id")
+      assert(collectPairs(structPath) == specPairs,
+        s"$dirName: struct path diverged from the spec")
     }
     // the fast path runs in a whole-stage-codegen stage (round-11
     // verdict item 4: q225's shape must not drop to the interpreted
     // generic merge) — fallback disabled so a janino failure FAILS
-    withConf("spark.sql.codegen.fallback" -> "false",
-        "spark.graft.asof.broadcast" -> "never") {
+    withConf("spark.sql.codegen.fallback" -> "false", MergePin) {
       val fused = AsOfJoin.byKeys(l, r, graft.plans.AsOfDirection.Backward,
           Seq("l_k1", "l_k2"), Seq("r_k1", "r_k2"), "l_t", "r_t", "r_id")
         .groupBy("l_k1").agg(count("r_id").as("n"))
@@ -893,8 +885,9 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("broadcast selection rejects non-long-backed shapes even under force") {
-    // string keys have no primitive index — force must still plan the
-    // (generic) merge, not fail or mis-plan
+    // string keys have no primitive index — a threshold above the
+    // right side's size must still plan the (generic) merge, not fail
+    // or mis-plan
     val rnd = new scala.util.Random(83L)
     val l = (0 until 50).map(i => (i.toLong, s"k${i % 5}", i.toLong / 3))
       .toDF("l_id", "l_k", "l_t")
@@ -944,7 +937,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       // the 100 TB fact-fact shape: co-partitioned merge, exactly one
       // exchange per side (AsOfJoinExec renders as "AsOfJoin" —
       // TreeNode strips the Exec suffix)
-      mergeOnly {
+      val mergeRows = mergeOnly {
         val df = SparkEntry.queries(name)(spark, sf)
         val p = df.queryExecution.executedPlan.toString
         assert("""\+- AsOfJoin """.r.findFirstIn(p).isDefined,
@@ -953,8 +946,9 @@ class AsOfJoinSpec extends AnyFunSuite {
           .findFirstIn(p).isDefined, s"$name still has the window composition")
         assert("Exchange hashpartitioning".r.findAllIn(p).size == 2,
           s"$name should shuffle each side exactly once")
+        df.collect().toSeq
       }
-      // under the default auto selection at this fixture SF every
+      // under the default selection at this fixture SF every
       // long-backed right side is dimension-sized -> broadcast, with NO
       // shuffle below the as-of on the left; q225's struct byKeys shape
       // stays on the merge by design
@@ -962,13 +956,17 @@ class AsOfJoinSpec extends AnyFunSuite {
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("WindowGroupLimit") && !"Window \\[row_number".r
         .findFirstIn(p).isDefined, s"$name still has the window composition")
+      // broadcast on/off invariance: the operator the threshold selects
+      // must not change a single row or the row order
+      val rows = df.collect().toSeq
+      assert(rows == mergeRows,
+        s"$name: default-threshold rows differ from the merge leg's")
       if (name == "q225_asof_bykeys_repeat_shipment") {
         // two-key fast path: stays on the merge (the broadcast index is
         // single-key), and the merge runs in a whole-stage-codegen
-        // stage — execute so AQE finalizes and prints the stage marker
+        // stage — executed above, so AQE has finalized the stage marker
         assert("""\+- AsOfJoin """.r.findFirstIn(p).isDefined,
           s"$name (two-key) should stay on the merge operator")
-        df.collect()
         val executed = df.queryExecution.executedPlan.toString
         assert("""\*\(\d+\) AsOfJoin""".r.findFirstIn(executed).isDefined,
           s"$name two-key merge should be codegen-staged:\n$executed")
@@ -981,7 +979,7 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("q226 plan: the fact side reaches the as-of with zero exchanges and zero sorts") {
     // the driver-gated broadcast query (round-11 verdict item 2 done
-    // criterion): under auto at this SF the checkpoint table broadcasts,
+    // criterion): by default at this SF the checkpoint table broadcasts,
     // so the ONLY hash exchanges in the whole plan are the checkpoint
     // build's aggregate and the final returnflag aggregate — the
     // lineitem fact is never shuffled or sorted for the as-of itself
@@ -993,8 +991,8 @@ class AsOfJoinSpec extends AnyFunSuite {
       s"only the checkpoint build + final agg may shuffle:\n$p")
     assert("""Sort \[""".r.findAllIn(p).size == 1,
       s"only the final ORDER BY may sort — the fact side must not:\n$p")
-    // under never the same query pays the fact shuffle the broadcast
-    // mode exists to remove: left + right as-of exchanges appear
+    // with broadcast disabled the same query pays the fact shuffle the
+    // broadcast mode exists to remove: left + right as-of exchanges appear
     mergeOnly {
       val pm = SparkEntry.queries("q226_asof_broadcast_monthly_checkpoint")(spark, sf)
         .queryExecution.executedPlan.toString

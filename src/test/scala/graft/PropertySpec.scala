@@ -1201,8 +1201,10 @@ class PropertySpec extends AnyFunSuite {
         (col("sz_a") + col("sz_b") - col("inter")), 4) >= 0.5)
       .select("doc_a", "doc_b")
     val mv = graft.operators.Dedup.verifiedPairs(spark, sf)
-      .select("doc_a", "doc_b")
-    assert(mv.collect().map(_.toSeq).toSet == inline.collect().map(_.toSeq).toSet)
+      .select("doc_a", "doc_b").collect().map(_.toSeq)
+    // a set compare alone would accept duplicate (doc_a, doc_b) rows
+    assert(mv.length == mv.toSet.size, "verified_pairs_j05 repeats a pair")
+    assert(mv.toSet == inline.collect().map(_.toSeq).toSet)
   }
 
   test("q162 prefix-overlap filter loses no pair: output == brute-force containment") {
@@ -1227,6 +1229,10 @@ class PropertySpec extends AnyFunSuite {
           (col("sz_a") === col("sz_b") && col("doc_a") < col("doc_b"))))
       .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "containment")
     val out = SparkEntry.queries("q162_containment_pairs")(spark, sf)
-    assert(out.collect().map(_.toSeq).toSet == ref.collect().map(_.toSeq).toSet)
+      .collect().map(_.toSeq)
+    // columns lead with (doc_a, doc_b): each pair must appear once
+    val pairs = out.map(_.take(2))
+    assert(pairs.length == pairs.toSet.size, "q162 repeats a (doc_a, doc_b) pair")
+    assert(out.toSet == ref.collect().map(_.toSeq).toSet)
   }
 }

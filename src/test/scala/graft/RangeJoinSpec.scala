@@ -22,6 +22,9 @@ class RangeJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val BinMark = "__graft_range_bin"
+  /** The rule-off twin: Spark's own optimizer rule exclusion. */
+  private val RuleOff =
+    "spark.sql.optimizer.excludedRules" -> "graft.plans.RangeJoinRewrite"
 
   private def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -73,7 +76,7 @@ class RangeJoinSpec extends AnyFunSuite {
       assert(optimized(df).contains(BinMark), "rule should fire under conf width")
       resultSet(df)
     }
-    val naive = withConf("spark.graft.rangeJoin.enabled" -> "false") {
+    val naive = withConf(RuleOff) {
       val df = mk()
       assert(!optimized(df).contains(BinMark))
       resultSet(df)
@@ -108,7 +111,7 @@ class RangeJoinSpec extends AnyFunSuite {
       if t >= lo - 5L && t <= lo + 7L
     } yield (pid, iid)).toSet
     assert(resultSet(df) == expected)
-    val naive = withConf("spark.graft.rangeJoin.enabled" -> "false")(resultSet(mk()))
+    val naive = withConf(RuleOff)(resultSet(mk()))
     assert(naive == expected)
   }
 
@@ -168,7 +171,7 @@ class RangeJoinSpec extends AnyFunSuite {
         "sampling must supply the width when the conf cannot")
     }
     withConf(
-      "spark.graft.rangeJoin.enabled" -> "false",
+      RuleOff,
       "spark.graft.rangeJoin.binSize" -> "64") {
       // force the plan INSIDE the conf scope — optimization is lazy
       val disabled = pts.join(ivs, col("t") >= col("lo") && col("t") <= col("hi"))
@@ -198,7 +201,7 @@ class RangeJoinSpec extends AnyFunSuite {
         "the conf width must band the join when sampling times out")
       val banded = df.collect().map(_.toSeq).groupBy(identity).view
         .mapValues(_.length).toMap
-      val naive = withConf("spark.graft.rangeJoin.enabled" -> "false") {
+      val naive = withConf(RuleOff) {
         pts2.join(ivs2, col("t") >= col("lo") && col("t") <= col("hi"))
           .collect().map(_.toSeq).groupBy(identity).view
           .mapValues(_.length).toMap
@@ -383,7 +386,7 @@ class RangeJoinSpec extends AnyFunSuite {
         "overlap form must explode BOTH sides")
       overlapPairs(df)
     }
-    val naive = withConf("spark.graft.rangeJoin.enabled" -> "false") {
+    val naive = withConf(RuleOff) {
       overlapPairs(mk())
     }
     val expected = overlapBrute
@@ -511,7 +514,7 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(pb.contains(s"${BinMark}_genl"), "q230 must ride the overlap banding")
     assert(!pb.contains("BroadcastNestedLoopJoin") && !pb.contains("CartesianProduct"))
     val bandedRows = banded.collect().map(_.toSeq).toSeq
-    val naiveRows = withConf("spark.graft.rangeJoin.enabled" -> "false") {
+    val naiveRows = withConf(RuleOff) {
       run().collect().map(_.toSeq).toSeq
     }
     assert(bandedRows == naiveRows)
@@ -525,7 +528,7 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(pb.contains(BinMark), "q227 must ride the automatic banding")
     assert(!pb.contains("BroadcastNestedLoopJoin") && !pb.contains("CartesianProduct"))
     val bandedRows = banded.collect().map(_.toSeq).toSeq
-    val naiveRows = withConf("spark.graft.rangeJoin.enabled" -> "false") {
+    val naiveRows = withConf(RuleOff) {
       val df = run()
       val pn = df.queryExecution.executedPlan.toString
       assert(!pn.contains(BinMark))

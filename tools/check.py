@@ -7,8 +7,15 @@ Reads oracle_sql.json + per-query spark parquet from verifyOutDir, runs each
 oracle SQL in DuckDB over the sfDir parquet tables, and compares cell-by-cell
 (columns sorted by name, row order as produced — queries must end in a total
 ORDER BY). Stricter than any hash: exact equality, NaN==NaN, None==None.
+
+CHECK_JSON=<dest.json> also writes a snapshot: pass/fail lists and
+`no_oracle`, the output dirs that have no oracle entry. The committed
+CORRECTNESS_SELF_*.json artifacts come from (sfDir: the sf0.01 or sf0.1
+fixture directory, outDir: any scratch directory):
+  sbt -batch "runMain graft.Verify <sfDir> <outDir>"
+  CHECK_JSON=CORRECTNESS_SELF_sf001.json python3 tools/check.py <sfDir> <outDir>
 """
-import duckdb, sys, json, glob
+import duckdb, sys, json, glob, os
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -131,14 +138,16 @@ for name in sorted(oracle):
 
 print(f"\n{len(passes)} passed, {len(fails)} failed" + (f": {fails}" if fails else ""))
 
-# Optional machine-readable snapshot for committed dual-scale artifacts:
-#   CHECK_JSON=/path/out.json python3 tools/check.py <sf> <out>
-jpath = __import__("os").environ.get("CHECK_JSON")
+jpath = os.environ.get("CHECK_JSON")
 if jpath:
+    no_oracle = sorted(d for d in os.listdir(out)
+                       if os.path.isdir(f"{out}/{d}") and d not in oracle
+                       and (not only or d in only))
     with open(jpath, "w") as f:
         json.dump({"sf_dir": sf, "verify_out": out,
                    "n_pass": len(passes), "n_fail": len(fails),
-                   "failed": sorted(fails), "passed": sorted(passes)},
+                   "failed": sorted(fails), "passed": sorted(passes),
+                   "no_oracle": no_oracle},
                   f, indent=1, sort_keys=True)
     print(f"wrote {jpath}")
 sys.exit(1 if fails else 0)
