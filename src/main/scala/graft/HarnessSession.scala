@@ -1,13 +1,13 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.SparkSession
 
 /** THE harness session recipe — one definition for every entry point
-  * (Bench, Verify, DriverSim, StageMetrics, TimeQ), so a conf added for
-  * the bench protocol cannot silently diverge from the session a
-  * profiling tool measures under (round-16 review: DriverSim's whole
-  * premise is "the EXACT bench protocol", which copy-pasted conf blocks
-  * cannot guarantee). */
+  * (Bench, Verify, StageMetrics, Explain, perfbench), so a conf added
+  * for the bench protocol cannot silently diverge from the session a
+  * profiling tool measures under, as copy-pasted conf blocks can. */
 object HarnessSession {
 
   /** Cpu-count string from the harness env contract. */
@@ -86,23 +86,25 @@ object HarnessSession {
     s
   }
 
-  /** 1-minute system load average (used by the bench/driversim
-    * artifacts to make contaminated readings attributable). */
+  /** The harness's one JSON codec: Bench's artifacts and Verify's
+    * oracle_sql.json. Exact decimals, so a two-decimal field prints as
+    * its `%.2f` text and is never trailing-zero-stripped. */
+  lazy val json: ObjectMapper = new ObjectMapper()
+    .setNodeFactory(JsonNodeFactory.withExactBigDecimals(true))
+
+  /** 1-minute system load average (used by the bench artifacts to make
+    * contaminated readings attributable). */
   def loadAvg: Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Untimed GC-debt prevention (round-19; the q206 mechanism, named by
-    * the r15 prefixgc differential and re-proved this round: after ~125
-    * queries of accumulated old-gen garbage the next big allocating
-    * query pays the deferred collection INSIDE its timed runs -- prefix
-    * replay min 8.02 s vs 5.53 s with a forced GC between prefix and
-    * timing vs 3.59 s isolated). Instead of insuring after the fact
-    * (the gc-debt third run), pay the debt where it belongs: in the
-    * sweep's UNTIMED teardown, outside every timing window. Bounded two
-    * ways so it can never become the new overhead: only above
-    * half-heap occupancy, and at most one forced collection per
-    * minute. Called between queries by Bench's timed loop and by
-    * DriverSim's prefix replay (which must mirror the protocol). */
+  /** Untimed GC-debt prevention: after ~125 queries of accumulated
+    * old-gen garbage the next big allocating query pays the deferred
+    * collection INSIDE its timed runs (q206 at sf0.1: 8.02 s after the
+    * sweep prefix, 5.53 s with a forced GC first, 3.59 s isolated). So
+    * the debt is paid in the sweep's UNTIMED teardown instead, bounded
+    * two ways so it can never become the new overhead: only above
+    * half-heap occupancy, and at most one forced collection per minute.
+    * Called between queries by Bench's timed loop. */
   private var lastForcedGc = 0L
   def teardownGc(): Unit = synchronized {
     val rt = Runtime.getRuntime
@@ -115,11 +117,7 @@ object HarnessSession {
   }
 
   /** The bench protocol's sf0.001 warm fixture next to the target SF
-    * dir (None when absent, or when the target IS sf0.001). ONE
-    * definition shared by Bench and every DriverSim mode that claims to
-    * reproduce its protocol (round-19 review: the copy-pasted block
-    * could silently desynchronize the sim from the protocol it
-    * certifies). */
+    * dir (None when absent, or when the target IS sf0.001). */
   def warmDir(sfDir: String): Option[String] = {
     val d = new java.io.File(sfDir).getParentFile
     val w = new java.io.File(d, "sf0.001")

@@ -3,6 +3,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `oracle_sql.json`'s text: name → oracle SQL through the harness
+    * JSON codec, so a quote, tab or CR in the SQL can never make a
+    * strict `json.load` fail. */
+  private[graft] def oracleJson(sql: Map[String, String]): String = {
+    import scala.jdk.CollectionConverters._
+    HarnessSession.json.writeValueAsString(sql.asJava)
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — names restrict the dump
     // (dev iteration); the driver always calls with exactly two args.
@@ -44,21 +52,8 @@ object Verify {
       // across a 55-query session.
       finally spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -552,8 +552,10 @@ object Analytics {
       // spread run back-to-back in one stage with no further exchange —
       // same bytes moved once instead of twice, one aggregate pass
       // saved. unit is computed before the exchange so the shuffle
-      // carries 3 narrow columns. Partition count stays the session
-      // shuffle-partition conf — scale-neutral, no local constant.
+      // carries 3 narrow columns. The explicit count makes this a
+      // REPARTITION_BY_NUM exchange: it is pinned to the session
+      // shuffle-partition conf (the core count under HarnessSession)
+      // and AQE never coalesces it, so it does not follow the bytes.
       val ps = Tables.lineitem(s, dir)
         .select(col("l_partkey"), col("l_suppkey"),
           (col("l_extendedprice") / col("l_quantity")).as("q_unit"))

@@ -1,8 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast,
+  Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.types._
 
 /** DataFrame-level API over the native [[AsOfJoinPlan]] operator.
   *
@@ -211,7 +213,6 @@ object AsOfJoin {
   def sqlBuilder(exprs: Seq[Expression]): LogicalPlan = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     require(exprs.length == 8 || exprs.length == 9,
       "graft_asof takes (direction, leftTable, rightTable, leftKey, " +
       "rightKey, leftTime, rightTime, rightTie[, tolerance]); got " +
@@ -265,11 +266,11 @@ object AsOfJoin {
     val rk = attr(rp, rightKey, "right")
     // the GENERIC merge compares right values with orderings derived
     // from the LEFT side's types — silently wrong matches on type drift
-    // unless rejected here. Mixed types WITHIN the long-backed integral
-    // family (int key vs bigint key — warehouse schema drift) are fine:
-    // the primitive/codegen paths widen each side independently.
-    // Shape compare ignores nullability and struct field NAMES (byKeys
-    // builds struct keys from differently-named columns on each side).
+    // unless rejected here. Mixed types WITHIN the pure-integral family
+    // (int key vs bigint key — warehouse schema drift) are widened
+    // below instead. Shape compare ignores nullability and struct field
+    // NAMES (byKeys builds struct keys from differently-named columns on
+    // each side).
     // Cross-type pairs are only safe when both sides' PHYSICAL values
     // mean the same thing: pure integer counts widen losslessly, and
     // TimestampType/TimestampNTZType share the epoch-µs representation
@@ -278,11 +279,9 @@ object AsOfJoin {
     // long-backed" test but compare days against epoch-µs — silently
     // wrong matches for exactly the schema-drift case this guard
     // exists to catch.
-    def sameShape(a: org.apache.spark.sql.types.DataType,
-        b: org.apache.spark.sql.types.DataType) = {
-      import org.apache.spark.sql.types._
-      val pureIntegral = Set[DataType](LongType, IntegerType, ShortType,
-        ByteType)
+    val pureIntegral = Set[DataType](LongType, IntegerType, ShortType,
+      ByteType)
+    def sameShape(a: DataType, b: DataType) = {
       val timestampMicros = Set[DataType](TimestampType, TimestampNTZType)
       DataType.equalsStructurally(a, b, ignoreNullability = true) ||
         (pureIntegral(a) && pureIntegral(b)) ||
@@ -305,7 +304,6 @@ object AsOfJoin {
     // tolerance and nearest both need time ARITHMETIC (distances), not
     // just ordering — integral-backed time columns only
     if (tolerance.isDefined || dir == AsOfDirection.Nearest) {
-      import org.apache.spark.sql.types._
       tolerance.foreach(t => require(t >= 0, "as-of tolerance must be >= 0"))
       val ok = Set[Any](LongType, IntegerType, ShortType, ByteType,
         TimestampType, TimestampNTZType, DateType)
@@ -314,8 +312,30 @@ object AsOfJoin {
         s"as-of $what needs integral-backed time columns, got " +
         s"${lt.dataType}/${rt.dataType}")
     }
-    GraftBridge.ofRows(spark, AsOfJoinPlan(lp, rp, lk, rk,
-      lt, rt, attr(rp, rightTie, "right"), dir, tolerance,
-      leftKey2 = k2.map(_._1), rightKey2 = k2.map(_._2)))
+    // A mixed-width integral pair must meet as ONE type before the
+    // operator sees it: the exchange hashes each side with its own
+    // type's Murmur3 (int 5 and bigint 5 land in different partitions,
+    // so matches silently vanish), and the generic merge orders right
+    // values with the left side's ordering. Such columns are compared
+    // through hidden bigint copies, dropped again above the join so the
+    // output schema stays the inputs' own.
+    val wide = (Seq((lk, rk), (lt, rt)) ++ k2).collect {
+      case (l, r) if l.dataType != r.dataType &&
+          pureIntegral(l.dataType) && pureIntegral(r.dataType) => Seq(l, r)
+    }.flatten.filter(_.dataType != LongType).map(a =>
+      a -> Alias(Cast(a, LongType), s"__graft_asof_wide_${a.name}")()).toMap
+    def widen(p: LogicalPlan): LogicalPlan = p.output.flatMap(wide.get) match {
+      case Seq() => p
+      case extra => Project(p.output ++ extra, p)
+    }
+    def w(a: Attribute): Attribute = wide.get(a).fold(a)(_.toAttribute)
+    val (lw, rw) = (widen(lp), widen(rp))
+    val join = AsOfJoinPlan(lw, rw, w(lk), w(rk), w(lt), w(rt),
+      attr(rp, rightTie, "right"), dir, tolerance,
+      leftKey2 = k2.map(p => w(p._1)), rightKey2 = k2.map(p => w(p._2)))
+    GraftBridge.ofRows(spark,
+      if (wide.isEmpty) join
+      else Project(join.output.take(lp.output.size) ++
+        join.output.drop(lw.output.size).take(rp.output.size), join))
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
@@ -15,6 +17,12 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * stage durations. This is how a warm q206 second is attributed to
   * its sub-pipelines (BASELINE.md carries the readout).
   *
+  * After the operator tree it prints the last run's per-JOB timeline:
+  * a query with persist points and broadcast builds runs as a CHAIN of
+  * Spark jobs, so each job's [start, end] shows the serial driver-only
+  * gaps between them (and any jobs run while the query function builds
+  * its DataFrame, before the timed collect).
+  *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.tools.StageMetrics q206_cf_holdout_precision 3"
   */
@@ -29,12 +37,16 @@ object StageMetrics {
     // physical shape than they bench)
     val spark = graft.HarnessSession.create()
     val fn = graft.SparkEntry.queries(name)
+    val jobs = new JobSpans
+    spark.sparkContext.addSparkListener(jobs)
     // warm run(s) first — metrics are read from the LAST (steady-state)
     // execution, so JIT/codegen/MV-build costs don't pollute the readout
     var lastSec = 0.0
     var df = fn(spark, sf)
     for (i <- 1 to runs) {
       spark.catalog.clearCache()
+      jobs.drain()
+      jobs.clear()
       df = fn(spark, sf)
       val t0 = System.nanoTime()
       df.collect(): Unit
@@ -81,6 +93,58 @@ object StageMetrics {
       }
     }
     walk(df.queryExecution.executedPlan, 0)
+    jobs.drain()
+    jobs.report()
     spark.stop()
+  }
+}
+
+/** Per-job spans fed by the listener bus: (id, start ms, end ms,
+  * description, tasks) for every job that ended since [[clear]]. */
+private final class JobSpans extends SparkListener {
+  private val running = scala.collection.mutable.Map.empty[Int, (Long, String, Int)]
+  private val ended = scala.collection.mutable.Buffer.empty[(Int, Long, Long, String, Int)]
+  private var lastEventNs = System.nanoTime()
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+    val desc = Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .getOrElse("")
+    running(js.jobId) = (js.time, desc, js.stageInfos.map(_.numTasks).sum)
+    lastEventNs = System.nanoTime()
+  }
+
+  override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+    running.remove(je.jobId).foreach { case (t0, desc, nTasks) =>
+      ended += ((je.jobId, t0, je.time, desc, nTasks))
+    }
+    lastEventNs = System.nanoTime()
+  }
+
+  /** Wait until every started job has ended and the bus has been quiet
+    * for 200 ms (capped): the bus delivers asynchronously, and a fixed
+    * sleep silently drops late job ends. */
+  def drain(capMs: Long = 10000L): Unit = {
+    val t0 = System.nanoTime()
+    def settled = synchronized(running.isEmpty &&
+      System.nanoTime() - lastEventNs > 200L * 1000 * 1000)
+    while (!settled && System.nanoTime() - t0 < capMs * 1000L * 1000) Thread.sleep(20)
+  }
+
+  def clear(): Unit = synchronized(ended.clear())
+
+  def report(): Unit = {
+    println("== jobs of the last run ==")
+    val ds = synchronized(ended.toSeq).sortBy(_._2)
+    val base = ds.headOption.map(_._2).getOrElse(0L)
+    var prevEnd = base
+    var serialGap = 0L
+    ds.foreach { case (id, s, e, desc, nTasks) =>
+      val gap = s - prevEnd
+      if (gap > 0) serialGap += gap
+      prevEnd = math.max(prevEnd, e)
+      println(f"job $id%3d  +${(s - base) / 1000.0}%6.2f s  dur ${(e - s) / 1000.0}%6.3f s  gap ${gap / 1000.0}%6.3f s  tasks $nTasks%4d  ${desc.take(60)}")
+    }
+    println(f"jobs=${ds.size}  span=${(prevEnd - base) / 1000.0}%.2f s  driver-only gap total=${serialGap / 1000.0}%.2f s")
   }
 }

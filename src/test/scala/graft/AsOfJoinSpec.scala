@@ -372,11 +372,9 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("mixed INTEGRAL key widths widen correctly; non-integral mismatches reject") {
-    // int key joined to bigint key (warehouse schema drift) widens on
-    // the primitive/codegen paths — accepted and correct on both the
-    // codegen merge and the volcano primitive loop (with long-backed
-    // times they never reach the generic path, whose left-type
-    // ordering would mis-compare)
+    // int key joined to bigint key (warehouse schema drift) widens to
+    // bigint when the join is built — accepted and correct on both the
+    // codegen merge and the volcano primitive loop
     val l = mkSide(63L, 200, "l").withColumn("l_k", col("l_k").cast("int"))
     val r = mkSide(64L, 200, "r")
     val native = mergeOnly(
@@ -397,6 +395,37 @@ class AsOfJoinSpec extends AnyFunSuite {
     val rD = r.withColumn("r_td", col("r_t").cast("double"))
     intercept[IllegalArgumentException] {
       AsOfJoin.backward(l, rD, "l_k", "r_k", "l_t", "r_td", "r_id")
+    }
+    // the inputs above coalesce to one partition; across a real 8-way
+    // hash exchange an int key and a bigint key must still meet
+    // (Murmur3 hashes int 5 and bigint 5 to different partitions).
+    // Right row x is left row x's own backward match.
+    withConf(MergePin, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "8") {
+      val lw = spark.range(0, 2000, 1, 4).select(col("id").as("l_id"),
+        (col("id") % 50).cast("int").as("l_k"), col("id").as("l_t"))
+      val rw = spark.range(0, 2000, 1, 4).select(col("id").as("r_id"),
+        (col("id") % 50).as("r_k"), col("id").as("r_t"))
+      val wide = AsOfJoin.backward(lw, rw, "l_k", "r_k", "l_t", "r_t", "r_id")
+      assert(wide.schema("l_k").dataType == org.apache.spark.sql.types.IntegerType,
+        "widening must not leak into the output schema")
+      assert(collectPairs(wide.select("l_id", "r_id")) ==
+        (0L until 2000L).map(x => (x, Some(x))).toSet)
+    }
+    // the generic merge (no primitive binding) orders right values with
+    // the LEFT side's types: string keys with int vs bigint times, and
+    // int vs bigint keys with double times, must widen there too
+    val stringKeyed = (
+      stringKey(mkSide(66L, 200, "l"), "l_k").withColumn("l_t", col("l_t").cast("int")),
+      stringKey(mkSide(67L, 200, "r"), "r_k"))
+    val doubleTimed = (l.withColumn("l_t", col("l_t").cast("double")),
+      r.withColumn("r_t", col("r_t").cast("double")))
+    for ((lg, rg) <- Seq(stringKeyed, doubleTimed); forward <- Seq(false, true)) {
+      val native =
+        (if (forward) AsOfJoin.forward(lg, rg, "l_k", "r_k", "l_t", "r_t", "r_id")
+         else AsOfJoin.backward(lg, rg, "l_k", "r_k", "l_t", "r_t", "r_id"))
+          .select("l_id", "r_id")
+      assert(collectPairs(native) == collectPairs(windowSpec(lg, rg, forward)))
     }
   }
 
