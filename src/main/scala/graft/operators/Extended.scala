@@ -371,8 +371,10 @@ object Extended {
     * naively — `a.hi >= b.lo AND b.hi >= a.lo` — and auto-banded by
     * [[graft.plans.RangeJoinRewrite]]'s overlap form (both sides
     * explode their bin ranges, pairs dedup at the first shared bin;
-    * the harness sessions' 1 h default bin width applies since window
-    * lengths are data-dependent). Without the rule this is a
+    * window lengths are data-dependent, so each side's width is its
+    * sampled median length and the smaller one bands the join; the 1 h
+    * `spark.graft.rangeJoin.binSize` is only the fallback when sampling
+    * yields no width). Without the rule this is a
     * BroadcastNestedLoopJoin over all window pairs. Semantics:
     * incident correlation — per-user error windows (first..last error
     * that user emitted that day, ≥2 errors) that OVERLAP another

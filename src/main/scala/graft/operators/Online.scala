@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -9,278 +9,179 @@ import graft.QueryDef
 import graft.sources.Tables
 import graft.streaming.{Event, EventStream}
 
-/** The streaming module's driver-visible correctness gate (round-7
-  * VERDICT item 3): the `transformWithState` daily anomaly monitor —
-  * MapState open days, ListState trailing baseline, event-time day
-  * timers — replayed over the events fixture and hash-compared against
-  * batch q120's DuckDB oracle. Until this query existed, the online
-  * path was proved only by in-repo StreamingSpec assertions; now a
-  * drift between the online arithmetic and the batch job fails the
-  * same external gate every batch operator faces.
+/** The streaming operators as externally gated queries: each stateful
+  * operator is replayed over the events fixture to close and its emitted
+  * set is hash-compared against a batch DuckDB oracle, so a drift between
+  * the online arithmetic and the batch job fails the same gate every
+  * batch operator faces.
   */
 object Online {
 
   /** Replays a bounded fixture through an unbounded-input operator.
     *
-    * The driver feed here is the REPLAY HARNESS, not the operator: a
-    * production deployment points [[EventStream.dailyAnomalies]] at
-    * `readStream` (Kafka/files) and never routes input through the
-    * driver; MemoryStream — Spark's canonical replay source — is
-    * driver-fed by design. The feed is CHUNKED: a distributed
-    * chronological sort + `toLocalIterator` + bounded `grouped` batches,
-    * so peak driver memory is O(feed batch), not O(fixture) — the
-    * harness survives fixture scale-ups. At least two data batches make
-    * the watermark advance mid-run, so day state and registered timers
-    * genuinely carry across micro-batches. Sentinel structure (one
-    * batch cheaper than the round-9 two-probe-batch shape): the FIRST
-    * far-future sentinel rides in the LAST data batch (the input stays
-    * chronologically sorted — it is the max), advancing the watermark
-    * past every real day's close horizon at that batch's end; one final
-    * probe batch (second sentinel) then processes under the advanced
-    * watermark and fires every remaining close timer (a batch's
-    * watermark applies in the NEXT batch, hence the probe). The
-    * sentinels' own far-future day/session never closes and is never
-    * emitted — the emitted set covers exactly the fixture's day set.
-    * Each micro-batch costs ~1s of fixed streaming-engine machinery
-    * (RocksDB open/commit, planning), which IS the thing this gate
-    * exists to exercise; the 50k-row feed-batch cap keeps the batch
-    * count small at fixture scales while bounding driver memory.
+    * The driver feed is the replay harness, not the operator: a
+    * deployment points the operator at `readStream` (Kafka/files), while
+    * MemoryStream, Spark's replay source, is driver-fed by design. The
+    * feed is chunked (distributed chronological sort, `toLocalIterator`,
+    * bounded `grouped` batches), so peak driver memory is O(feed batch),
+    * not O(fixture). At least two data batches make the watermark advance
+    * mid-run, so state and registered timers carry across micro-batches.
+    * The first far-future sentinel rides in the last data batch (it is
+    * the global max, so the input stays sorted) and advances the
+    * watermark past every real day's close horizon; one probe batch (the
+    * second sentinel) then runs under that watermark and fires every
+    * remaining close timer, since a batch's watermark applies in the next
+    * batch. The sentinels' own day/session never closes, so the emitted
+    * set covers exactly the fixture's.
+    *
+    * The replay runs on a clone of `s` that carries the replay's confs,
+    * so the caller's session is never written and nothing is restored.
+    * The caller's streaming listeners are added to the clone, so they see
+    * the replay's progress; they stay on it, because delivery is
+    * asynchronous and removing them after `stop()` can drop the last
+    * progress events.
     */
   private def replayThrough(s: SparkSession, dir: String, tag: String,
       rocksDb: Boolean = true, sentinelType: String = "click")
-      (pipe: org.apache.spark.sql.Dataset[Event] => DataFrame): (Seq[Row], Long) = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val partKey = "spark.sql.shuffle.partitions"
-    val clogKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val trackKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "trackTotalNumberOfRows"
-    val before = s.conf.getOption(key)
-    val beforeParts = s.conf.getOption(partKey)
-    val beforeClog = s.conf.getOption(clogKey)
-    val beforeTrack = s.conf.getOption(trackKey)
-    // RocksDB is transformWithState's backing CONTRACT (q194 must run on
-    // it — that is the production store the gate certifies); the v1
-    // stateful APIs (q218's flatMapGroupsWithState) run on the default
-    // in-memory HDFS-backed provider, which skips the per-micro-batch
-    // RocksDB instance open/commit cost entirely.
-    if (rocksDb) {
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit uploads the per-batch delta
-      // instead of a full RocksDB snapshot — the per-micro-batch commit
-      // cost becomes O(changed keys), not O(store). The state here is
-      // tiny, but snapshot commits still pay fixed sst/zip machinery;
-      // deltas skip it. This is also the setting a 100 TB deployment
-      // would run with (it bounds commit time by update rate, not by
-      // accumulated state size).
-      s.conf.set(clogKey, "true")
-      // The store's row-count metric does a RocksDB scan per commit when
-      // tracking is on; the gate asserts on EMITTED rows, not store
-      // metrics, so skip it.
-      s.conf.set(trackKey, "false")
+      (pipe: Dataset[Event] => DataFrame): (Seq[Row], Long) = {
+    val rocksConf = "spark.sql.streaming.stateStore.rocksdb."
+    val replayConfs: Seq[(String, String)] = Seq(
+      // State-store count = shuffle partitions at stream start × batches,
+      // and the key space is |event types| (tiny) or hash-spread users.
+      // 8 measured best on the 32-thread harness: 4 → 8 cut the three
+      // replays ~0.7 s by parallelizing the per-row state updates, 16
+      // regressed (store open/commit overtakes the added parallelism).
+      // Each replay starts a fresh checkpoint, so the narrowed
+      // partitioning never reaches another query's state.
+      "spark.sql.shuffle.partitions" -> "8",
+      // No-data micro-batches exist to emit early in a live deployment.
+      // In a replay to close they only duplicate work: every timer they
+      // would fire also fires in the final probe batch, whose watermark
+      // covers the whole calendar (each one cost ~0.3 s at sf0.1). The
+      // emitted set is unchanged.
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++
+      // RocksDB is transformWithState's backing store and the production
+      // store q194 certifies; the v1 stateful operators (q218's
+      // flatMapGroupsWithState, q246's window aggregate) run on the
+      // default HDFS-backed provider and skip RocksDB's per-batch
+      // instance open/commit.
+      (if (rocksDb) Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        // Changelog checkpointing commits the per-batch delta instead of
+        // a full snapshot: commit cost is O(changed keys), not O(store),
+        // which is also what a large deployment runs with.
+        rocksConf + "changelogCheckpointing.enabled" -> "true",
+        // The row-count metric scans RocksDB per commit; the gate checks
+        // emitted rows, not store metrics.
+        rocksConf + "trackTotalNumberOfRows" -> "false") else Nil)
+    val r: SparkSession = GraftBridge.cloneSession(s, replayConfs: _*)
+    s.streams.listListeners().foreach(r.streams.addListener)
+    import r.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = r.sqlContext
+    val evBase = Tables.events(r, dir)
+      .select(col("event_id"), col("ts_us"), col("user_id"),
+        col("event_type"), col("value"))
+      .as[Event]
+    // Chronological order is computed distributedly; toLocalIterator then
+    // runs one serial driver job per partition, so 4 range partitions
+    // keep the round trips few while the sort stays distributed. The
+    // state-store partitioning binds at stream start, not here.
+    val sorted = evBase
+      .repartitionByRange(4, col("ts_us"), col("event_id"))
+      .sortWithinPartitions(col("ts_us"), col("event_id"))
+    // <= 50k rows per feed batch keeps driver memory bounded as the
+    // fixture scales; each micro-batch costs ~1 s of fixed streaming
+    // machinery, so the cap is the query's cost knob (sf0.1: 2 data
+    // batches + 1 probe). Sorted input is never late relative to the
+    // watermark, so the emitted set is independent of the batch count.
+    val batchSize = 50000
+    val stream = MemoryStream[Event]
+    // Memory sink: the emitted result is bounded by the calendar or
+    // session count, never by event volume, and the sink skips the
+    // file sink's per-batch commit machinery. The replay's job is
+    // state/timer semantics, not sink IO.
+    val qname = s"graft_replay_${tag}_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    // The checkpoint is per-replay scratch, so it goes on a RAM disk when
+    // there is one: the offset/commit WAL fsyncs per micro-batch.
+    val ckBase = {
+      val shm = new java.io.File("/dev/shm")
+      if (shm.isDirectory && shm.canWrite) shm.toPath
+      else new java.io.File(System.getProperty("java.io.tmpdir")).toPath
     }
-    else before.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-    // state-store count = shuffle partitions at stream start × batches;
-    // the keyspace here is |event types| (tiny) or hash-spread users.
-    // 8 measured best on the 32-thread harness (round-15 sweep: 4 → 8
-    // cut the trio ~0.7 s by parallelizing the per-row state updates;
-    // 16 regressed — instance open/commit overtakes the added
-    // parallelism). 32 would spend the whole run opening stores. Each
-    // replay starts a fresh checkpoint, so the narrowed partitioning
-    // never leaks into another query's state.
-    s.conf.set(partKey, "8")
-    // No-data micro-batches exist to EMIT EARLY in a live deployment
-    // (fire watermark timers as soon as the watermark passes instead of
-    // waiting for the next data batch). In a replay-to-close harness they
-    // only duplicate work: every timer they would fire also fires in the
-    // final probe batch, whose watermark (from the far-future sentinel)
-    // covers the whole calendar. Profiled at sf0.1: each data batch was
-    // followed by a ~0.3 s no-data batch — a third of the gate's batches
-    // doing nothing the probe batch doesn't redo. The emitted set is
-    // unchanged (hash-gated against the oracle either way).
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val beforeNoData = s.conf.getOption(noDataKey)
-    s.conf.set(noDataKey, "false")
+    val ckDir = java.nio.file.Files
+      .createTempDirectory(ckBase, s"graft_online_${tag}_ck")
+    val q = pipe(stream.toDS())
+      .writeStream.format("memory").queryName(qname)
+      .option("checkpointLocation", ckDir.toString)
+      .outputMode(OutputMode.Append()).start()
     try {
-      val evBase = Tables.events(s, dir)
-        .select(col("event_id"), col("ts_us"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[Event]
-      // Global chronological order computed DISTRIBUTEDLY (range-
-      // partitioned sort); toLocalIterator below then streams one
-      // partition at a time to the driver, so peak driver footprint is
-      // O(partition + feed batch), never the whole fixture (round-8
-      // judge item: the previous full collect() materialized 100k rows
-      // on the driver inside a registered query).
-      // Explicit 4-way range partitioning for the feed sort (round-17):
-      // toLocalIterator below runs ONE serial driver job per partition,
-      // so the plain orderBy (session shuffle partitions = 8 here)
-      // paid 8 sequential fetch round-trips for a feed the driver
-      // consumes one batch at a time anyway; 4 halves them while the
-      // sort stays distributed (the state-store partitioning set above
-      // is untouched — it binds at stream start, not here).
-      val sorted = evBase
-        .repartitionByRange(4, col("ts_us"), col("event_id"))
-        .sortWithinPartitions(col("ts_us"), col("event_id"))
-      // >= 2 data batches so the watermark genuinely advances mid-run;
-      // <= 50k rows per feed batch (a few MB) so driver memory stays
-      // bounded as the fixture scales — at sf0.1 that gives 2 data
-      // batches + 1 sentinel probe = 3 micro-batches (each costs ~1 s
-      // of fixed streaming-engine machinery, so the cap IS the query's
-      // bench cost knob). Sorted input means later batches are never
-      // late relative to the advancing watermark, so the emitted set is
-      // independent of the batch count.
-      val batchSize = 50000
-      val stream = MemoryStream[Event]
-      // Memory sink, not a parquet sink: the emitted result is bounded by
-      // the calendar / session count (thousands of rows), never by the
-      // event volume, so driver-side accumulation is safe — and it skips
-      // the per-micro-batch file-sink machinery (task commit, manifest
-      // log, directory listing) that was pure overhead for a result this
-      // small. A production deployment writing unbounded output would use
-      // the parquet sink (exercised by q202/q216's batch writers); the
-      // REPLAY HARNESS's job is state/timer semantics, not sink IO.
-      val qname = s"graft_replay_${tag}_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      // Offset/commit WAL writes fsync per micro-batch; on a RAM disk the
-      // sync is free. The checkpoint is harness-scoped scratch (each
-      // replay starts fresh), so tmpfs durability is irrelevant — a real
-      // deployment points this at reliable storage.
-      val ckBase = {
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) shm.toPath
-        else new java.io.File(System.getProperty("java.io.tmpdir")).toPath
-      }
-      val ckDir = java.nio.file.Files
-        .createTempDirectory(ckBase, s"graft_online_${tag}_ck")
-      val ck = ckDir.toString
-      val q = pipe(stream.toDS())
-        .writeStream.format("memory").queryName(qname)
-        .option("checkpointLocation", ck)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        // Iterator end-to-end: grouped() over toLocalIterator never holds
-        // more than one feed batch; MemoryStream purges committed batches,
-        // so the stream side is bounded too. Sentinel 1 rides the LAST
-        // data batch (still sorted — it is the global max), so only ONE
-        // extra probe batch is needed to fire the close timers.
-        import scala.jdk.CollectionConverters._
-        // sentinelType matters when the pipe FILTERS by event type: the
-        // predicate is pushed BELOW the EventTimeWatermark collector
-        // (it doesn't reference the watermark column), so a sentinel of
-        // a filtered-out type would never advance the watermark and the
-        // final windows would never close (observed on q246: the last
-        // two days stayed open behind a 'click' sentinel).
-        // `far` (the sentinel horizon) is derived from the FEED itself —
-        // the input is globally sorted, so the last data batch's last
-        // row is the fixture max and no separate count/max aggregation
-        // job is needed (round-14 verdict item 5: that scan was a full
-        // per-query pass of pure harness overhead). A single-chunk
-        // fixture is split in half so the watermark still advances
-        // mid-run; the halves are already on the driver, so the split
-        // costs nothing and batch shapes match the previous
-        // (n+1)/2-capped feed exactly.
-        val grouped =
-          sorted.toLocalIterator().asScala.grouped(batchSize).map(_.toSeq)
-        val data: Iterator[Seq[Event]] =
-          if (!grouped.hasNext) Iterator(Seq.empty[Event])
+      import scala.jdk.CollectionConverters._
+      // sentinelType matters when the pipe filters by event type: the
+      // filter is pushed below the watermark collector, so a sentinel of
+      // a filtered-out type would never advance the watermark (q246's
+      // last two days stayed open behind a 'click' sentinel).
+      // `far`, the sentinel horizon, comes from the sorted feed itself:
+      // the last data batch's last row is the fixture max, so no separate
+      // max job is needed. A single-chunk fixture is split in half so the
+      // watermark still advances mid-run.
+      val grouped =
+        sorted.toLocalIterator().asScala.grouped(batchSize).map(_.toSeq)
+      val data: Iterator[Seq[Event]] =
+        if (!grouped.hasNext) Iterator(Seq.empty[Event])
+        else {
+          val first = grouped.next()
+          if (grouped.hasNext) Iterator(first) ++ grouped
+          else if (first.size > 1) {
+            val (a, b) = first.splitAt((first.size + 1) / 2)
+            Iterator(a, b)
+          } else Iterator(first)
+        }
+      var far = 10L * 86400000000L // empty-feed fallback: 10 days past epoch
+      val withSent1: Iterator[Seq[Event]] = new Iterator[Seq[Event]] {
+        def hasNext: Boolean = data.hasNext
+        def next(): Seq[Event] = {
+          val b = data.next()
+          if (data.hasNext) b
           else {
-            val first = grouped.next()
-            if (grouped.hasNext) Iterator(first) ++ grouped
-            else if (first.size > 1) {
-              val (a, b) = first.splitAt((first.size + 1) / 2)
-              Iterator(a, b)
-            } else Iterator(first)
-          }
-        var far = 10L * 86400000000L // empty-feed fallback: 10 days past epoch
-        val withSent1: Iterator[Seq[Event]] = new Iterator[Seq[Event]] {
-          def hasNext: Boolean = data.hasNext
-          def next(): Seq[Event] = {
-            val b = data.next()
-            if (data.hasNext) b
-            else {
-              b.lastOption.foreach(e => far = e.ts_us + 10L * 86400000000L)
-              b :+ Event(9000000L, far, 0L, sentinelType, 0.0)
-            }
+            b.lastOption.foreach(e => far = e.ts_us + 10L * 86400000000L)
+            b :+ Event(9000000L, far, 0L, sentinelType, 0.0)
           }
         }
-        // lazily built: `far` is final once the last data batch was fed
-        val feeds: Iterator[Seq[Event]] = withSent1 ++ Iterator
-          .continually(Seq(
-            Event(9000001L, far + 3600000000L, 0L, sentinelType, 0.0)))
-          .take(1)
-        val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-        feeds.foreach { c =>
-          val t0 = System.nanoTime()
-          stream.addData(c)
-          val t1 = System.nanoTime()
-          q.processAllAvailable()
-          if (dbg) System.err.println(
-            s"[stream-debug] $tag batch=${c.size} add=${(t1-t0)/1e6}ms " +
-            s"wait=${(System.nanoTime()-t1)/1e6}ms " +
-            s"progress=${Option(q.lastProgress).map(_.json).getOrElse("-")}")
-        }
-        if (dbg) q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-debug-all] $tag id=${p.batchId} " +
-            s"rows=${p.numInputRows} dur=${p.durationMs}")
-        }
-        (s.table(qname).collect().toSeq, far)
-      } finally {
-        // Each teardown step in its own try: the result was already
-        // collected above, so a failing stop() must not leak the temp
-        // view or the checkpoint dir (they'd accumulate across a
-        // 221-query verify run). Failures are reported, not rethrown.
-        try q.stop()
-        catch { case e: Throwable =>
-          System.err.println(s"[online] $qname stop failed: $e") }
-        try s.catalog.dropTempView(qname): Unit
-        catch { case _: Throwable => () }
-        // The checkpoint is per-replay scratch (often on tmpfs) — delete
-        // it eagerly so repeated verify/bench/test runs don't accumulate
-        // WAL files in RAM. Files.walk streams hold OPEN DIRECTORY
-        // HANDLES until closed (full consumption does not auto-close) —
-        // close in a finally so replays don't leak descriptors.
-        try {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(ckDir)
-          val paths = try walk.iterator().asScala.toSeq finally walk.close()
-          paths.sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
       }
+      // lazily built: `far` is final once the last data batch was fed
+      val feeds: Iterator[Seq[Event]] = withSent1 ++ Iterator
+        .continually(Seq(
+          Event(9000001L, far + 3600000000L, 0L, sentinelType, 0.0)))
+        .take(1)
+      feeds.foreach { c => stream.addData(c); q.processAllAvailable() }
+      (r.table(qname).collect().toSeq, far)
     } finally {
-      before match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      beforeParts match {
-        case Some(v) => s.conf.set(partKey, v)
-        case None => s.conf.unset(partKey)
-      }
-      beforeNoData match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None => s.conf.unset(noDataKey)
-      }
-      beforeClog match {
-        case Some(v) => s.conf.set(clogKey, v)
-        case None => s.conf.unset(clogKey)
-      }
-      beforeTrack match {
-        case Some(v) => s.conf.set(trackKey, v)
-        case None => s.conf.unset(trackKey)
-      }
+      // The result is already collected, so a failing stop() is reported
+      // rather than rethrown, and must not keep the checkpoint (often on
+      // tmpfs) from being deleted. Files.walk holds open directory
+      // handles until closed, hence the explicit close.
+      try q.stop()
+      catch { case e: Throwable =>
+        System.err.println(s"[online] $qname stop failed: $e") }
+      try {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(ckDir)
+        val paths = try walk.iterator().asScala.toSeq finally walk.close()
+        paths.sortBy(-_.getNameCount)
+          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      } catch { case _: Throwable => () }
     }
   }
 
-  /** Online/offline parity as a REGISTERED query: the emitted closed-day
-    * verdicts (tiny — |types| × |days| rows) are re-shaped to q120's
-    * exact schema and ordering and checked against q120's own oracle.
-    * The streaming run itself is the distributed part; the final
-    * re-shape runs on the collected verdict set, which is bounded by
-    * the calendar, not the data. */
+  /** Online/offline parity: the `transformWithState` daily anomaly
+    * monitor (MapState open days, ListState trailing baseline, event-time
+    * day timers) replayed to close. The emitted closed-day verdicts
+    * (|types| × |days| rows) are re-shaped to q120's exact schema and
+    * ordering and checked against q120's own oracle; the re-shape runs on
+    * the collected verdict set, which is bounded by the calendar, not the
+    * data. */
   private val q194 = QueryDef(
     "q194_streaming_anomaly_parity",
     "transformWithState daily anomaly monitor replayed to close; oracle = batch q120",
@@ -369,15 +270,11 @@ object Online {
         .orderBy("user_id", "session_id")
     })
 
-  /** Third externally-gated streaming operator (round-12 verdict item
-    * 7): the stream ⋈ STATIC broadcast enrichment join
-    * ([[EventStream.enrichedDailyNationRevenue]]) replayed to close.
-    * Previously spec-gated only (StreamingSpec proves batch/stream
-    * parity and pins the broadcast plan); the deterministic replay
-    * oracle is the plain batch join+agg the enrichment computes —
+  /** The stream ⋈ static broadcast enrichment join
+    * ([[EventStream.enrichedDailyNationRevenue]]) replayed to close. The
+    * oracle is the plain batch join+agg the enrichment computes:
     * purchases joined to the customer→nation dimension, revenue as the
-    * order-free decimal sum per (day, nation) — so the driver's DuckDB
-    * compare now gates the stream-static join semantics too. The
+    * order-free decimal sum per (day, nation). The
     * emitted set is bounded by days × nations, never by event volume;
     * the far-future sentinel closes every 1-day window (append-mode
     * window aggregates emit when the watermark passes the window end;
@@ -399,23 +296,23 @@ object Online {
       FROM p GROUP BY 1, 2
       ORDER BY day, nation"""),
     (s, dir) => {
-      // Measured round-17 and left UN-persisted on purpose: caching the
-      // 2-column dim (so each micro-batch's broadcast build reads the
-      // cache instead of re-running the customer ⋈ nation scan+join)
-      // read 5.2-10.5 s vs ~3.3 s — the InMemoryRelation inside the
-      // per-batch re-planned static side costs more than the scan it
-      // saves. The per-batch re-plan is also the documented semantics
-      // (a live deployment picks up refreshed dimension snapshots).
-      val dim = Tables.customer(s, dir)
-        .join(Tables.nation(s, dir),
+      // The dim is built on the stream's session, so no plan mixes the
+      // caller's session with the replay's. It is left unpersisted on
+      // purpose: a cached dim read 5.2-10.5 s vs ~3.3 s, since the
+      // InMemoryRelation inside the per-batch re-planned static side
+      // costs more than the scan it saves, and the per-batch re-plan is
+      // the documented semantics (a live deployment picks up refreshed
+      // dimension snapshots).
+      def dim(r: SparkSession) = Tables.customer(r, dir)
+        .join(Tables.nation(r, dir),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey").as("user_id"), col("n_name").as("nation"))
-      // purchase-typed sentinel: it must SURVIVE the purchase filter to
+      // purchase-typed sentinel: it must survive the purchase filter to
       // advance the watermark (see replayThrough), and is then dropped
       // by the dim join (user_id 0 is no customer) before aggregation
       val (rows, _) = replayThrough(s, dir, "q246", rocksDb = false,
         sentinelType = "purchase")(ev =>
-        EventStream.enrichedDailyNationRevenue(ev.toDF(), dim))
+        EventStream.enrichedDailyNationRevenue(ev.toDF(), dim(ev.sparkSession)))
       val schema = StructType(Seq(
         StructField("day", DateType, nullable = true),
         StructField("nation", StringType, nullable = true),

@@ -760,7 +760,7 @@ object Pipeline {
       Tables.customer(s, dir).createOrReplaceTempView("g71_customer")
       Tables.orders(s, dir).createOrReplaceTempView("g71_orders")
       Tables.events(s, dir).createOrReplaceTempView("g71_events")
-      s.sql("""
+      try s.sql("""
         SELECT c_custkey, c_name,
                (SELECT COUNT(*) FROM g71_orders o
                 WHERE o.o_custkey = c.c_custkey) AS n_orders
@@ -772,6 +772,12 @@ object Pipeline {
                           WHERE e.user_id = c.c_custkey
                             AND e.event_type = 'error')
         ORDER BY c_custkey""")
+      finally {
+        // s.sql analyzed the views eagerly above, so dropping them leaves
+        // the returned plan self-contained
+        Seq("g71_customer", "g71_orders", "g71_events")
+          .foreach(s.catalog.dropTempView)
+      }
     })
 
   // ---------------------------------------------------------------------

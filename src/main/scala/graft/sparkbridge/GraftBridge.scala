@@ -19,6 +19,17 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of `spark` that shares its SparkContext and cached data but
+    * owns its SQLConf, temp views and streaming query manager, with
+    * `confs` set on the copy only. `cloneSession` (unlike `newSession`)
+    * keeps the caller's runtime confs, functions and planner strategies,
+    * which a foreign pyspark session sets after build. */
+  def cloneSession(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val r = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => r.conf.set(k, v) }
+    r
+  }
+
   /** Idempotently add a planner strategy to an already-running session
     * (the extensions path only applies at session build time). */
   def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = synchronized {

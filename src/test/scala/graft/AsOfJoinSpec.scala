@@ -77,13 +77,6 @@ class AsOfJoinSpec extends AnyFunSuite {
       if (row.isNullAt(row.fieldIndex("r_id"))) None
       else Some(row.getLong(row.fieldIndex("r_id"))))).toSet
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally before.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(x => spark.conf.set(k, x)) }
-  }
-
   /** Operator selection follows Spark's own broadcast threshold. `-1`
     * pins the co-partitioned SORT-MERGE operator: the tiny fixtures in
     * this suite sit under the default threshold, so every long-backed

@@ -52,11 +52,17 @@ class DriftSpec extends AnyFunSuite {
   }
 
   test("drift loaders restore the nanosAsLong conf on the no-drift path") {
+    // TestSpark pins the flag at the builder, so the restore is only
+    // observable on a session without it, the shape of a foreign pyspark
+    // session. newSession() inherits builder confs, hence the unset.
     val k = "spark.sql.legacy.parquet.nanosAsLong"
-    val before = spark.conf.getOption(k)
-    Tables.orders(spark, sf)      // live fixture: no ns drift today
-    Tables.lineitem(spark, sf)
-    assert(spark.conf.getOption(k) == before)
+    val s = spark.newSession()
+    s.conf.unset(k)
+    val before = s.conf.getOption(k)
+    Tables.orders(s, sf)      // live fixture: no ns drift today
+    Tables.lineitem(s, sf)
+    Tables.events(s, sf)
+    assert(s.conf.getOption(k) == before)
   }
 
   test("Tables.validate reports a ns-encoded events fixture as in-contract") {

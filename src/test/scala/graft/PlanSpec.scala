@@ -271,6 +271,8 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LeftSemi"), "EXISTS must decorrelate to a left-semi join")
     assert(p.contains("LeftAnti"), "NOT EXISTS must decorrelate to a left-anti join")
     assert(p.contains("LeftOuter"), "scalar COUNT must decorrelate to an outer agg join")
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("g71_")),
+      "q71 must not leave its temp views on the caller's session")
   }
 
   test("q65: bucket self-join is broadcast (bucket assignment shuffles nothing)") {

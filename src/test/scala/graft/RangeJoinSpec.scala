@@ -26,13 +26,6 @@ class RangeJoinSpec extends AnyFunSuite {
   private val RuleOff =
     "spark.sql.optimizer.excludedRules" -> "graft.plans.RangeJoinRewrite"
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally before.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(x => spark.conf.set(k, x)) }
-  }
-
   /** Adversarial fixture: points and variable-length intervals around
     * zero (bins must use FLOOR, not truncation), with nulls, inverted
     * and empty intervals, and duplicated values. Seeded — the suite is

@@ -309,9 +309,55 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("q194 registered replay equals batch q120 row-for-row") {
+    // The replay runs on a clone of the caller's session: a concurrent
+    // reader of the caller's conf sees only the caller's values for the
+    // replay's five keys, the caller's streaming listeners still see the
+    // replay, and the keys need no restoring afterwards.
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
+    def confNow() = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val before = confNow()
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[Map[String, Option[String]]]()
+    val watching = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() =>
+      while (watching.get) { seen.add(confNow()); Thread.sleep(1) })
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val progress = new java.util.concurrent.atomic.AtomicInteger
+    val isReplay = (name: String) =>
+      name != null && name.startsWith("graft_replay_q194_")
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (isReplay(e.name)) started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (isReplay(e.progress.name)) progress.incrementAndGet(): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    watcher.start()
     // the driver-visible gate: the registered streaming query's output
     // must BE q120's output — same rows, same order, same schema
-    val online = SparkEntry.queries("q194_streaming_anomaly_parity")(spark, sf)
+    val online =
+      try SparkEntry.queries("q194_streaming_anomaly_parity")(spark, sf)
+      finally { watching.set(false); watcher.join() }
+    try {
+      // listener delivery is asynchronous: bounded poll for the events
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((started.get < 1 || progress.get < 3) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(!seen.isEmpty && seen.asScala.forall(_ == before),
+      s"the caller's conf changed during the replay: ${seen.asScala} vs $before")
+    assert(confNow() == before)
+    assert(started.get == 1, s"caller's listener saw ${started.get} replay starts")
+    assert(progress.get >= 3,
+      s"caller's listener saw ${progress.get} replay progress events")
     val batch = SparkEntry.queries("q120_daily_volume_anomaly")(spark, sf)
     assert(online.schema.map(f => (f.name, f.dataType)) ==
       batch.schema.map(f => (f.name, f.dataType)),

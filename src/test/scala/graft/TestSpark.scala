@@ -41,4 +41,13 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `pairs` set on the shared session, then restores
+    * each key's previous value (or unsets it). */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(x => spark.conf.set(k, x)) }
+  }
 }
