@@ -15,9 +15,8 @@ object HarnessSession {
     Runtime.getRuntime.availableProcessors().toString)
 
   /** The standard harness builder: graft extensions, local[cpus],
-    * cpus shuffle partitions, UTC, the 1 h-µs range-join band default,
-    * the ObjectHashAggregate fallback threshold, legacy ns-as-long
-    * parquet probing, ANSI off, no UI. */
+    * cpus shuffle partitions, UTC, the ObjectHashAggregate fallback
+    * threshold, legacy ns-as-long parquet probing, ANSI off, no UI. */
   def builder(nCpus: String = cpus): SparkSession.Builder =
     SparkSession.builder()
       // the standard library-integration path: native expressions, the
@@ -27,10 +26,6 @@ object HarnessSession {
       .master(s"local[$nCpus]")
       .config("spark.sql.shuffle.partitions", nCpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // range-join banding default: engine time columns are epoch-µs,
-      // so variable-interval range joins band at 1 h out of the box
-      // (RangeJoinRewrite scaladoc; static-width shapes ignore this)
-      .config("spark.graft.rangeJoin.binSize", "3600000000")
       // ObjectHashAggregate (TypedImperativeAggregate: MinHash/SimHash
       // sketches) falls back to sort-based agg after 128 groups/partition
       // by default, serializing the sketch buffer per row. Session-level

@@ -73,9 +73,8 @@ object Dedup {
   /** The rare-shingle relatedness pairs (docs sharing a shingle with
     * document frequency 2..3, canonical doc_a < doc_b) as a
     * materialized view — the weak-signal graph shared by q209 (link
-    * prediction) and q250 (the recursive-CTE walk), each of which
-    * previously rebuilt the df profile + pair self-join from scratch.
-    * Joining ONLY on rare shingles bounds the per-key fan-out at
+    * prediction) and q250 (the recursive-CTE walk), so the df profile +
+    * pair self-join is built once per dataset, not per query. Joining ONLY on rare shingles bounds the per-key fan-out at
     * C(3,2) by construction (the q209 skew discipline), so the build
     * is linear in vocabulary size. */
   private[graft] def rareShinglePairs(s: SparkSession, dir: String): DataFrame =
@@ -100,8 +99,8 @@ object Dedup {
 
   /** The exact-Jaccard-verified near-dup pair set (J >= 0.5) as a
     * materialized view — the shared prefix of the kill-list, components
-    * and PageRank queries, previously rebuilt from scratch by each
-    * (caches are cleared between queries). Oracle twin:
+    * and PageRank queries, built once per dataset because in-session
+    * caches are cleared between queries. Oracle twin:
     * [[graft.functions.text.verifiedPairsCte]]. */
   private[graft] def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     graft.sources.MaterializedViews.cached(s, dir, "verified_pairs_j05") {
@@ -117,17 +116,17 @@ object Dedup {
   /** Intersection sizes for candidate pairs only: the shingle join is
     * restricted to the candidate set before any pair row is produced. */
   private def interForCandidates(sh: DataFrame, pairs: DataFrame): DataFrame =
-    // measured round-17 and left UNfanned on purpose: forcing the
+    // Left UNfanned on purpose: measured, forcing the
     // |cand| × |shingles/doc| expansion to 32-way (composite-key
     // repartition) multiplied cumulative task-seconds ~5× for the SAME
     // wall — the expansion+count is memory-bandwidth-bound, and AQE's
     // few coalesced tasks already saturate it at fixture scale; at
     // corpus scale the shuffles upstream are large enough that AQE
     // keeps them wide on its own.
-    // The shingle equality rides IN the join key (doc_b, shingle) — the
-    // previous doc_b-only join + post-filter materialized the per-pair
-    // CROSS PRODUCT of the two shingle sets inside the codegen stage
-    // (round-17 StageMetrics on q162: 17.3M intermediate rows for 351k
+    // The shingle equality rides IN the join key (doc_b, shingle): a
+    // doc_b-only join + post-filter materializes the per-pair CROSS
+    // PRODUCT of the two shingle sets inside the codegen stage
+    // (StageMetrics on q162: 17.3M intermediate rows for 351k
     // candidates, ~28 cumulative task-seconds charged to the downstream
     // aggregate) where the two-key hash lookup emits only the ~|shared
     // shingles| matches. Guide §3: the join condition, not a post-join
@@ -835,7 +834,7 @@ object Dedup {
       // keep (A strictly smaller, or equal-size with doc_a < doc_b —
       // which also excludes self-pairs) ever materialize
       //
-      // PPJoin-style prefix-OVERLAP filter (r18, guide §3; Xiao et al.
+      // PPJoin-style prefix-OVERLAP filter (guide §3; Xiao et al.
       // ICDE'08 positional discipline adapted to containment): of A's
       // p = min(⌊sz_a/5⌋+2, sz_a) probed prefix shingles, a true pair
       // (round(inter/sz_a,4) ≥ 0.8 ⟺ misses m = sz_a − inter ≤
@@ -847,13 +846,13 @@ object Dedup {
       // that the two floors drift apart, so it dips to 1 (from 4004),
       // to 0 (from 24004), and is ≤ 0 for every sz_a ≥ 39996, where
       // the filter prunes nothing. Recall is exact in every regime —
-      // a weaker bound only keeps more candidates. The
-      // r18 StageMetrics profile showed 361,350 probe-collision rows
-      // for 350,932 distinct candidates — i.e. ~97% of candidates
-      // share exactly ONE prefix shingle while the bound demands ≥ 2
-      // in that 2..4003 range — and the verify expansion over those
-      // candidates (17.3M rows, ~13.5 of the stage's 14.1 cumulative
-      // task-seconds) was 99.997% waste for 512 result rows. The
+      // a weaker bound only keeps more candidates. Without the filter,
+      // StageMetrics showed 361,350 probe-collision rows for 350,932
+      // distinct candidates — i.e. ~97% of candidates share exactly ONE
+      // prefix shingle while the bound demands ≥ 2 in that 2..4003
+      // range — and the verify expansion over those candidates (17.3M
+      // rows, ~13.5 of the stage's 14.1 cumulative task-seconds) was
+      // 99.997% waste for 512 result rows. The
       // distinct becomes the equivalent count aggregate (same shuffle)
       // and the match-count filter rides it. The oracle stays the
       // unfiltered self-join, so the DuckDB compare at 3 SFs remains
@@ -1006,8 +1005,8 @@ object Dedup {
       // only the similarities need recomputing, so the intersection is
       // CANDIDATE-RESTRICTED to the MV's pairs (the q23/q243 verify
       // discipline) instead of re-running the full shingle self-join —
-      // round-17 measurement: the unrestricted self-join + agg was ~70%
-      // of this query for pairs the MV already names. jaccardFromInter's
+      // measured, the unrestricted self-join + agg was ~70% of this
+      // query for pairs the MV already names. jaccardFromInter's
       // >= 0.5 filter keeps the arithmetic identical (every MV pair
       // passes it by construction); the oracle still states the
       // unfiltered self-join, so the DuckDB compare proves the recall.
@@ -1068,7 +1067,7 @@ object Dedup {
   /** MV-backed per-dataset fingerprint set: the positional md5 explode
     * is the dominant cost and q238 consumes the set five times (sizes,
     * commonness filter, both self-join sides), so it computes once per
-    * dataset like the shingle set (round-2 MV finding). */
+    * dataset like the shingle set. */
   private[graft] def winnowFingerprints(s: SparkSession, dir: String): DataFrame =
     graft.sources.MaterializedViews.cached(s, dir, "winnow_fp_k4w4") {
       winnowFingerprints(Tables.documents(s, dir))
@@ -1159,7 +1158,7 @@ object Dedup {
     * text, and unlike q129's fixed 32-token chunking it is
     * alignment-free: a span is found wherever it starts.
     *
-    * Island semantics (round-12 ADVICE): each duplicated k-gram start i
+    * Island semantics: each duplicated k-gram start i
     * covers the TOKEN range [i, i+k−1]; islands are the merge of
     * overlapping-or-adjacent ranges (the standard interval-merge window:
     * break when a start exceeds the running max end + 1), so two
@@ -1474,7 +1473,7 @@ object Dedup {
           substring(reverse(col("text")), 1, 24).as("k2"))
       // global rank by (key, doc_id) via the q154 bucket-prefix
       // decomposition: never one task sorting the whole corpus.
-      // Measured round-17 and left UN-persisted on purpose: the static
+      // Measured and left UN-persisted on purpose: the static
       // plan shows each rank frame's pipeline planned once per join side
       // (8 document scans), but AQE's runtime stage reuse already
       // unifies the identical exchanges — persisting the (doc_id, rn)
@@ -1597,8 +1596,7 @@ object Dedup {
           // so "distance ≤ 2" is `levenshtein(..., 2) >= 0`. Both a
           // plain `<= 2` (admits the -1 sentinel) and threshold 3 with
           // `>= 0` (admits d = 3) are latent divergences from the
-          // oracle's unbounded `<= 2`; the first was caught by the
-          // oracle compare, the second by the round-15 review pass.
+          // oracle's unbounded `<= 2`.
           (when(levenshtein(col("bname"), col("c_name"), 2) >= 0, 20).otherwise(-5) +
             when(col("bbal") === floor(col("c_acctbal")).cast("long"), 73)
               .otherwise(-11)).as("score"))

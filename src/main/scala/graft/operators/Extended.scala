@@ -372,10 +372,10 @@ object Extended {
     * [[graft.plans.RangeJoinRewrite]]'s overlap form (both sides
     * explode their bin ranges, pairs dedup at the first shared bin;
     * window lengths are data-dependent, so each side's width is its
-    * sampled median length and the smaller one bands the join; the 1 h
-    * `spark.graft.rangeJoin.binSize` is only the fallback when sampling
-    * yields no width). Without the rule this is a
-    * BroadcastNestedLoopJoin over all window pairs. Semantics:
+    * sampled median length and the smaller one bands the join; when
+    * sampling yields no width the join runs as written). Without the
+    * rule this is a BroadcastNestedLoopJoin over all window pairs.
+    * Semantics:
     * incident correlation — per-user error windows (first..last error
     * that user emitted that day, ≥2 errors) that OVERLAP another
     * user's window signal a shared outage; ordered pairs (a < b) so

@@ -47,36 +47,31 @@ import org.apache.spark.sql.types._
   *     interval spans at most two bins. (Overlap: both sides must
   *     infer; the smaller length wins, so the static per-row span is
   *     bounded by maxLen/minLen + 1.)
-  *  2. SAMPLED from the data (round-12 verdict item 6 — W is a
-  *     statistic, not a knob): for genuinely variable-length
-  *     intervals the rule runs one bounded planning-time job per
-  *     distinct (interval child, bounds) shape — median interval
-  *     length over a 20k-row prefix, memoized per JVM — and bands at
-  *     W ≈ that median: typical rows span ~2 bins, heavy-tail rows hit the
-  *     wide-row cap and route through the sentinel bucket. ANY width
-  *     is correct (the original predicate is retained), so sampling
-  *     nondeterminism can only move the plan between fast shapes,
-  *     never change results; a recursion guard keeps the sampling
-  *     query itself (or anything it plans) on the conf path.
-  *     Disable with `spark.graft.rangeJoin.sample = false`.
-  *  3. `spark.graft.rangeJoin.binSize` (positive long, in the column's
-  *     own units) when sampling is disabled or returns nothing (empty
-  *     prefix, null-only lengths, sampling failure). The graft harness
-  *     sessions default this to 1 h in µs — the engine's event-time
-  *     unit — as the belt-and-braces fallback.
-  * No width -> no rewrite. Widths are clamped to >= 2 so that
-  * `Long.MinValue` is unreachable as a real bin (|floor(v/W)| <=
-  * Long.MaxValue/2 + 1 for W >= 2) and can serve as the reserved
-  * fallback bin below.
+  *  2. Sampled from the data: for variable-length intervals the rule
+  *     runs one bounded planning-time job per distinct (interval child,
+  *     bounds) shape — median interval length over a 20k-row prefix,
+  *     memoized per JVM — and bands at W ≈ that median: typical rows
+  *     span ~2 bins, heavy-tail rows hit the wide-row cap and route
+  *     through the sentinel bucket. ANY width is correct (the original
+  *     predicate is retained), so sampling nondeterminism can only move
+  *     the plan between fast shapes, never change results; a recursion
+  *     guard keeps the sampling query itself (or anything it plans)
+  *     from sampling again.
+  * No width -> no rewrite: an empty prefix, null-only lengths, a
+  * sampling failure or timeout, or another thread's sampling job in
+  * flight leave the join as written, the same in every session. Widths
+  * are clamped to >= 2 so that `Long.MinValue` is unreachable as a real
+  * bin (|floor(v/W)| <= Long.MaxValue/2 + 1 for W >= 2) and can serve as
+  * the reserved fallback bin below.
   *
-  * WIDE-ROW FALLBACK (the crash/OOM guard): with a conf-chosen width
+  * WIDE-ROW FALLBACK (the crash/OOM guard): with a sampled width
   * nothing bounds a row's bin count — one open-ended interval could
   * ask Sequence for billions of elements and kill the query that used
   * to (slowly) run as a nested-loop join. So whenever the per-row span
-  * is not statically bounded under `spark.graft.rangeJoin.maxBinsPerRow`
-  * (default 4096), rows are split BY VALUE inside one join: a row
-  * whose span exceeds the cap emits only the reserved SENTINEL bin,
-  * and the opposite side emits its real bin(s) plus the sentinel, so
+  * is not statically bounded under `MaxBinsPerRow` (4096), rows are
+  * split BY VALUE inside one join: a row whose span exceeds the cap
+  * emits only the reserved SENTINEL bin, and the opposite side emits
+  * its real bin(s) plus the sentinel, so
   * wide rows meet everything in one reserved hash bucket (a bounded,
   * AQE-skew-splittable nested loop over just the wide rows) instead of
   * erroring. Exactly-once bookkeeping: in the point form a pair
@@ -93,7 +88,7 @@ import org.apache.spark.sql.types._
   *  - All bound expressions deterministic and integral-typed
   *    (byte/short/int/long — epoch-µs columns are the target; Date and
   *    Timestamp carry unit semantics that a width in "column units"
-  *    would silently mis-scale, the round-13 sameShape lesson).
+  *    would silently mis-scale).
   *  - No existing cross-side equi-conjunct: if one exists Spark already
   *    hash-partitions on it, and the guard doubles as the idempotence
   *    proof — the rewritten join carries a bin equi-conjunct, so the
@@ -115,8 +110,9 @@ import org.apache.spark.sql.types._
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val BinSizeConf = "spark.graft.rangeJoin.binSize"
-  private val MaxBinsConf = "spark.graft.rangeJoin.maxBinsPerRow"
+  /** Rows whose bin span (last bin − first bin) reaches this cap route
+    * to the sentinel bucket. */
+  private val MaxBinsPerRow = 4096L
 
   /** Reserved fallback bin: unreachable as a real bin because widths
     * are clamped to >= 2. */
@@ -183,22 +179,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     } yield h - l
   }
 
-  private def confWidth: Option[Long] =
-    scala.util.Try(conf.getConfString(BinSizeConf, "0").toLong)
-      .toOption.filter(_ >= 1L)
-
-  private val SampleConf = "spark.graft.rangeJoin.sample"
-
-  private def samplingEnabled: Boolean =
-    conf.getConfString(SampleConf, "true") == "true"
-
   private val SampleRows = 20000
-
-  private val SampleTimeoutConf = "spark.graft.rangeJoin.sampleTimeoutMs"
-
-  private def sampleTimeoutMs: Long =
-    scala.util.Try(conf.getConfString(SampleTimeoutConf, "15000").toLong)
-      .toOption.filter(_ >= 1L).getOrElse(15000L)
 
   /** Re-entrancy guard: the sampling query runs through the full
     * optimizer, so this rule fires inside it — those inner invocations
@@ -209,19 +190,19 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     override def initialValue(): Boolean = false
   }
 
-  /** JVM-wide single-flight gate (round-13 ADVICE): the ThreadLocal
-    * above only sees same-thread recursion, and the watchdog moves the
-    * sampling job to a worker thread — while ANY sampling job is in
-    * flight, every other thread's sampling attempt falls back to the
-    * conf path instead of stacking jobs inside planning. */
+  /** JVM-wide single-flight gate: the ThreadLocal above only sees
+    * same-thread recursion, and the watchdog moves the sampling job to
+    * a worker thread — while ANY sampling job is in flight, every other
+    * thread's sampling attempt finds no width (its join stays as
+    * written) instead of stacking jobs inside planning. */
   private val samplingActive = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Memoized sampled widths, keyed by the canonicalized (interval
     * child, lo, hi) shape PLUS a size-in-bytes fingerprint of the
-    * interval child (round-13 ADVICE: a long-lived driver must not
-    * keep a stale width after the underlying files change — rewritten
-    * data moves the leaf-relation byte size, which moves the key, and
-    * the stale entry ages out through the 256-shape sweep). Cleared
+    * interval child (a long-lived driver must not keep a stale width
+    * after the underlying files change — rewritten data moves the
+    * leaf-relation byte size, which moves the key, and the stale entry
+    * ages out through the 256-shape sweep). Cleared
     * wholesale if it ever grows past 256 shapes — a bench/driver
     * process touches a handful. */
   private val sampledWidthCache =
@@ -232,20 +213,19 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * side — the data-derived bin width for variable-length intervals.
     * Runs ONE small Spark job at planning time (prefix scan + approx
     * median) on a daemon worker bounded by a wall-clock watchdog
-    * (`spark.graft.rangeJoin.sampleTimeoutMs`, default 15 s; on expiry
-    * the job group is cancelled and planning proceeds on the conf
-    * path — sampling can no longer hang the optimizer). Skipped
-    * outright for streaming plans (micro-batch planning must never
+    * (`timeoutMs`; on expiry the job group is cancelled and planning
+    * proceeds without a width — sampling cannot hang the optimizer).
+    * Skipped outright for streaming plans (micro-batch planning must never
     * block on an ad-hoc batch job) and when the optimizing thread's
     * conf is not the active session's own (multi-session drivers: the
     * sampling job would otherwise run against a DIFFERENT session
-    * than the one owning the plan). Any failure or empty result falls
-    * back to the conf path. The width only shapes the plan — the
-    * retained original predicate keeps every width correct — so
-    * prefix nondeterminism is benign by construction. */
-  private def sampledWidth(intervalPlan: LogicalPlan,
+    * than the one owning the plan). Any failure or empty result gives
+    * no width. The width only shapes the plan — the retained original
+    * predicate keeps every width correct — so prefix nondeterminism is
+    * benign by construction. */
+  private def sampledWidth(timeoutMs: Long)(intervalPlan: LogicalPlan,
       lo: Expression, hi: Expression): Option[Long] = {
-    if (!samplingEnabled || inSampling.get() || intervalPlan.isStreaming)
+    if (inSampling.get() || intervalPlan.isStreaming)
       return None
     val spark = org.apache.spark.sql.SparkSession.getActiveSession.orNull
     // session-scope check: SQLConf.get (this rule's `conf`) is the
@@ -301,10 +281,10 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         // a cancel(true) landing while the FutureTask is still NEW makes
         // task.run() a no-op — call() never executes, so a release
         // inside call()'s finally would leak the gate FOREVER, silently
-        // disabling sampling JVM-wide (round-14 ADVICE). Tying the
-        // release to the thread body's finally keeps the documented
-        // invariant (a timed-out-but-still-running job holds the gate)
-        // while guaranteeing release on every start()ed-thread outcome.
+        // disabling sampling JVM-wide. Tying the release to the thread
+        // body's finally keeps the documented invariant (a
+        // timed-out-but-still-running job holds the gate) while
+        // guaranteeing release on every start()ed-thread outcome.
         val worker = new Thread(
           () => try task.run() finally samplingActive.set(false),
           "graft-rangejoin-sample")
@@ -317,16 +297,16 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           try spark.sparkContext.cancelJobGroup(jobGroup)
           catch { case scala.util.control.NonFatal(_) => () }
         }
-        try task.get(sampleTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+        try task.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
         catch {
           case _: java.util.concurrent.TimeoutException =>
             abandon(); None
           // An interrupt delivered to the OPTIMIZING thread while blocked
           // in get() is NOT NonFatal — without this arm it would
           // propagate out of the optimizer rule and fail planning instead
-          // of degrading to the conf-width fallback like every other
-          // sampling failure (round-14 ADVICE). Restore the interrupt
-          // flag for the caller and abandon the in-flight job.
+          // of leaving the join as written like every other sampling
+          // failure. Restore the interrupt flag for the caller and
+          // abandon the in-flight job.
           case _: InterruptedException =>
             Thread.currentThread().interrupt()
             abandon(); None
@@ -338,10 +318,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
     computed
   }
-
-  private def maxBinsPerRow: Long =
-    scala.util.Try(conf.getConfString(MaxBinsConf, "4096").toLong)
-      .toOption.filter(_ >= 1L).getOrElse(4096L)
 
   /** Chosen width plus the statically-provable per-row span bound (in
     * bins), when one exists. Widths clamped to >= 2 (sentinel safety);
@@ -372,19 +348,21 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def usable(e: Expression): Boolean =
     e.deterministic && isIntegral(e.dataType) && e.references.nonEmpty
 
-  private def pointWidth(rb: RangeBounds,
-      intervalPlan: LogicalPlan): Option[Width] =
+  /** Width of a variable-length interval side: (interval child, lo, hi). */
+  private type Sampler = (LogicalPlan, Expression, Expression) => Option[Long]
+
+  private def pointWidth(rb: RangeBounds, intervalPlan: LogicalPlan,
+      sample: Sampler): Option[Width] =
     staticWidth(rb.lower, rb.upper) match {
       // width = exact interval length -> every interval spans <= 2 bins
       case Some(len) => Some(Width(math.max(2L, len), Some(2L)))
       case None =>
-        sampledWidth(intervalPlan, rb.lower, rb.upper)
-          .orElse(confWidth)
+        sample(intervalPlan, rb.lower, rb.upper)
           .map(w => Width(math.max(2L, w), None))
     }
 
   private def overlapWidth(ob: OverlapBounds,
-      left: LogicalPlan, right: LogicalPlan): Option[Width] = {
+      left: LogicalPlan, right: LogicalPlan, sample: Sampler): Option[Width] = {
     val both = for {
       lL <- staticWidth(ob.loL, ob.hiL)
       lR <- staticWidth(ob.loR, ob.hiR)
@@ -398,14 +376,13 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     // rides the wide-row fallback)
     lazy val sampledBoth = {
       val sL = staticWidth(ob.loL, ob.hiL)
-        .orElse(sampledWidth(left, ob.loL, ob.hiL))
+        .orElse(sample(left, ob.loL, ob.hiL))
       val sR = staticWidth(ob.loR, ob.hiR)
-        .orElse(sampledWidth(right, ob.loR, ob.hiR))
+        .orElse(sample(right, ob.loR, ob.hiR))
       for { a <- sL; b <- sR }
         yield Width(math.max(2L, math.min(a, b)), None)
     }
     both.orElse(sampledBoth)
-      .orElse(confWidth.map(w => Width(math.max(2L, w), None)))
   }
 
   private def extractBounds(conjuncts: Seq[Expression],
@@ -478,9 +455,9 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** [[binRange]] with the wide-row fallback: rows spanning more than
-    * `cap` bins emit only the sentinel. */
+    * `MaxBinsPerRow` bins emit only the sentinel. */
   private def binRangeCapped(lo: Expression, hi: Expression, w: Long,
-      cap: Long, andSentinel: Boolean): Expression = {
+      andSentinel: Boolean): Expression = {
     val binLo = floorDiv(lo, w)
     val binHi = floorDiv(hi, w)
     val span  = new Subtract(binHi, binLo)
@@ -496,7 +473,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     // (span < 0) -> no bins; wide -> sentinel only; else real bins
     If(IsNull(span), emptyBins,
       If(LessThan(span, Literal(0L)), emptyBins,
-        If(LessThan(span, Literal(cap)), narrow,
+        If(LessThan(span, Literal(MaxBinsPerRow)), narrow,
           CreateArray(Seq(SentinelBin)))))
   }
 
@@ -515,8 +492,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * and the point side explodes {bin(t), sentinel} — a pair matches at
     * the real bin (narrow interval) XOR the sentinel (wide interval). */
   private def buildPoint(j: Join, rb: RangeBounds, width: Width): LogicalPlan = {
-    val cap = maxBinsPerRow
-    val needFallback = width.staticSpan.forall(_ > cap)
+    val needFallback = width.staticSpan.forall(_ > MaxBinsPerRow)
     val (pointPlan, intervalPlan) =
       if (rb.pointOnLeft) (j.left, j.right) else (j.right, j.left)
     val (pointBinAttr, newPoint) =
@@ -529,7 +505,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       }
     val intervalBins =
       if (!needFallback) binRange(rb.lower, rb.upper, width.w)
-      else binRangeCapped(rb.lower, rb.upper, width.w, cap, andSentinel = false)
+      else binRangeCapped(rb.lower, rb.upper, width.w, andSentinel = false)
     val (genOut, newInterval) =
       explodeBins(intervalBins, "__graft_range_bin_gen", intervalPlan)
     val newCond = And(EqualTo(pointBinAttr, genOut), j.condition.get)
@@ -546,15 +522,14 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * and the dedup conjunct demands the first shared REAL bin when both
     * rows are narrow and the sentinel otherwise. */
   private def buildOverlap(j: Join, ob: OverlapBounds, width: Width): LogicalPlan = {
-    val cap = maxBinsPerRow
-    val needFallback = width.staticSpan.forall(_ > cap)
+    val needFallback = width.staticSpan.forall(_ > MaxBinsPerRow)
     val (nLoL, nHiL) = (Least(Seq(asLong(ob.loL), asLong(ob.hiL))),
       Greatest(Seq(asLong(ob.loL), asLong(ob.hiL))))
     val (nLoR, nHiR) = (Least(Seq(asLong(ob.loR), asLong(ob.hiR))),
       Greatest(Seq(asLong(ob.loR), asLong(ob.hiR))))
     def bins(lo: Expression, hi: Expression): Expression =
       if (!needFallback) binRange(lo, hi, width.w)
-      else binRangeCapped(lo, hi, width.w, cap, andSentinel = true)
+      else binRangeCapped(lo, hi, width.w, andSentinel = true)
     val (genL, leftG) = explodeBins(bins(nLoL, nHiL),
       "__graft_range_bin_genl", j.left)
     val (genR, rightG) = explodeBins(bins(nLoR, nHiR),
@@ -565,7 +540,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       else {
         def narrow(lo: Expression, hi: Expression): Expression =
           LessThan(new Subtract(floorDiv(hi, width.w), floorDiv(lo, width.w)),
-            Literal(cap))
+            Literal(MaxBinsPerRow))
         If(And(narrow(nLoL, nHiL), narrow(nLoR, nHiR)), firstShared, SentinelBin)
       }
     val newCond = And(And(EqualTo(genL, genR), EqualTo(genL, requiredBin)),
@@ -574,7 +549,18 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       Join(leftG, rightG, j.joinType, Some(newCond), j.hint))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
+  override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan)
+
+  /** The rule with its width source exposed: `width = Some(w)` bands
+    * every variable-length interval at `w` in place of sampling (static
+    * inference still wins); `sampleTimeoutMs` bounds each sampling job.
+    * Call with the plan's session active, or sampling is skipped. */
+  private[graft] def rewrite(plan: LogicalPlan, width: Option[Long] = None,
+      sampleTimeoutMs: Long = 15000L): LogicalPlan = {
+    val sample: Sampler = width match {
+      case Some(w) => (_, _, _) => Some(w)
+      case None    => sampledWidth(sampleTimeoutMs)
+    }
     plan.transform {
       case j @ Join(left, right, Inner | Cross, Some(cond), _)
           // batch plans only: a stream-stream range join's state/
@@ -591,13 +577,14 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         else {
           val point = for {
             rb <- extractBounds(conjuncts, left, right)
-            w  <- pointWidth(rb, if (rb.pointOnLeft) right else left)
+            w  <- pointWidth(rb, if (rb.pointOnLeft) right else left, sample)
           } yield buildPoint(j, rb, w)
           lazy val overlap = for {
             ob <- extractOverlap(conjuncts, left, right)
-            w  <- overlapWidth(ob, left, right)
+            w  <- overlapWidth(ob, left, right, sample)
           } yield buildOverlap(j, ob, w)
           point.orElse(overlap).getOrElse(j)
         }
     }
+  }
 }

@@ -59,6 +59,42 @@ object MaterializedViews {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** Publish `out` atomically: `write` builds the view into a
+    * process-private temp sibling, timed into `buildLog`, which is then
+    * renamed into place. Two JVMs racing the same fingerprint each build
+    * a complete view; the loser's rename fails against the winner's
+    * (identical, deterministic) published dir and its temp is discarded —
+    * no reader can observe a partial write. A target dir WITHOUT
+    * _SUCCESS (a crash mid-publish, or a killed process) is garbage:
+    * delete it and retry the rename once, so one stale dir can't make
+    * the view permanently unbuildable. The temp is removed on every
+    * failure path so aborted builds don't leak under /tmp. */
+  private def publish(out: File, name: String)(write: File => Unit): Unit = {
+    val tmp = new File(out.getParentFile,
+      s"$name.tmp-${java.lang.ProcessHandle.current.pid}")
+    val t0 = System.nanoTime()
+    try {
+      write(tmp)
+      buildLog(name) = (System.nanoTime() - t0) / 1e9
+      def move(): Unit =
+        java.nio.file.Files.move(tmp.toPath, out.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      try move()
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException
+             | _: java.nio.file.FileSystemException
+          if new File(out, "_SUCCESS").isFile =>
+          // lost the race to an equivalent view — discard ours
+        case _: java.nio.file.FileAlreadyExistsException
+             | _: java.nio.file.DirectoryNotEmptyException
+             | _: java.nio.file.FileSystemException =>
+          // stale incomplete target (no _SUCCESS): evict and retry
+          deleteRecursively(out)
+          move()
+      }
+    } finally if (tmp.exists()) deleteRecursively(tmp)
+  }
+
   /** Read-through cache: returns `name` for dataset `dir`, building it
     * with `build` on first use. `srcFile` is the table the view derives
     * from — its size+mtime fingerprint the dataset version. */
@@ -68,47 +104,14 @@ object MaterializedViews {
       val src = new File(dir, srcFile)
       val fp = md5hex(s"$dir|${src.length}|${src.lastModified}")
       val out = new File(new File(root, fp), name)
-      if (!new File(out, "_SUCCESS").isFile) {
-        // Publish atomically: build into a process-private temp sibling,
-        // then rename into place. Two JVMs racing the same fingerprint
-        // each build a complete view; the loser's rename fails against
-        // the winner's (identical, deterministic) published dir and its
-        // temp is discarded — no reader can observe a partial write.
-        // A target dir WITHOUT _SUCCESS (a crash mid-publish under the
-        // old in-place path, or a killed process) is garbage: delete it
-        // and retry the rename once, so one stale dir can't make the
-        // view permanently unbuildable. try/finally removes the temp on
-        // any failure path so aborted builds don't leak under /tmp.
-        val tmp = new File(out.getParentFile,
-          s"$name.tmp-${java.lang.ProcessHandle.current.pid}")
-        val t0 = System.nanoTime()
-        try {
-          build.write.mode("overwrite").parquet(tmp.getPath)
-          buildLog(name) = (System.nanoTime() - t0) / 1e9
-          def move(): Unit =
-            java.nio.file.Files.move(tmp.toPath, out.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          try move()
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException
-                 | _: java.nio.file.FileSystemException
-              if new File(out, "_SUCCESS").isFile =>
-              // lost the race to an equivalent view — discard ours
-            case _: java.nio.file.FileAlreadyExistsException
-                 | _: java.nio.file.DirectoryNotEmptyException
-                 | _: java.nio.file.FileSystemException =>
-              // stale incomplete target (no _SUCCESS): evict and retry
-              deleteRecursively(out)
-              move()
-          }
-        } finally if (tmp.exists()) deleteRecursively(tmp)
-      }
+      if (!new File(out, "_SUCCESS").isFile)
+        publish(out, name)(tmp => build.write.mode("overwrite").parquet(tmp.getPath))
       s.read.parquet(out.getPath)
     }
 
-  /** Bucketed-layout sibling of [[cached]] (round-14 verdict item 2):
-    * a BUCKETED table is maintained warm state exactly like a
-    * materialized view — written once per dataset version, amortized
+  /** Bucketed-layout sibling of [[cached]]: a BUCKETED table is
+    * maintained warm state exactly like a materialized view — written
+    * once per dataset version, amortized
     * over every later exchange-free join — so charging its build to the
     * query that reads it measures layout ingest, not the join. The
     * files land under the same fingerprinted registry (atomic
@@ -127,35 +130,15 @@ object MaterializedViews {
     val out = new File(new File(root, fp), name)
     val table = s"graft_mv_${name}_${fp.take(8)}"
     if (!new File(out, "_SUCCESS").isFile) {
-      val pid = java.lang.ProcessHandle.current.pid
-      val tmp = new File(out.getParentFile, s"$name.tmp-$pid")
       // the bucketed writer needs a catalog name; the table is EXTERNAL
       // (explicit path), so dropping it below keeps the files — only the
       // transient metadata entry goes
-      val tmpTable = s"${table}_build_$pid"
-      val t0 = System.nanoTime()
-      try {
+      val tmpTable = s"${table}_build_${java.lang.ProcessHandle.current.pid}"
+      try publish(out, name) { tmp =>
         Layouts.writeBucketed(build, tmpTable, key, buckets, Some(tmp.getPath))
-        buildLog(name) = (System.nanoTime() - t0) / 1e9
-        def move(): Unit =
-          java.nio.file.Files.move(tmp.toPath, out.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        try move()
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException
-               | _: java.nio.file.FileSystemException
-            if new File(out, "_SUCCESS").isFile =>
-            // lost the race to an equivalent layout — discard ours
-          case _: java.nio.file.FileAlreadyExistsException
-               | _: java.nio.file.DirectoryNotEmptyException
-               | _: java.nio.file.FileSystemException =>
-            deleteRecursively(out)
-            move()
-        }
       } finally {
         try { s.sql(s"DROP TABLE IF EXISTS $tmpTable"): Unit }
         catch { case _: Throwable => () }
-        if (tmp.exists()) deleteRecursively(tmp)
       }
     }
     if (!s.catalog.tableExists(table)) {

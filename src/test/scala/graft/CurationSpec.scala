@@ -316,7 +316,7 @@ class CurationSpec extends AnyFunSuite {
     // semantics (short docs score repetitive=0 and drop out of the LM
     // mean instead of vanishing from n_docs/n_tokens) need a synthetic
     // fixture to be exercised at all.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-shortdoc").toFile
+    val tmp = TestSpark.tempDir("graft-shortdoc").toFile
     try {
       val docs = Seq(
         (0L, "one", "en", "srcA", 3L),

@@ -18,7 +18,7 @@ class DriftSpec extends AnyFunSuite {
   /** Copies a resource parquet into a fresh dir under the table's
     * canonical name so the Tables loaders read it unmodified. */
   private def dirWith(table: String, resource: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = TestSpark.tempDir("graft_drift").toString
     val in = getClass.getResourceAsStream(s"/fixtures/$resource")
     assert(in != null, s"missing test resource $resource")
     try java.nio.file.Files.copy(in,

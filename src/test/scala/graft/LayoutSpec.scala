@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Layouts, Tables}
@@ -14,7 +13,7 @@ class LayoutSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("partitioned write + filtered read prunes partitions in the scan") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part").toString
     Layouts.writePartitioned(
       Tables.events(spark, sf).select($"event_id", $"user_id", $"value", $"event_type"),
       dir, "event_type")
@@ -58,7 +57,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("raw-text input format (M1): text-source wordcount equals parquet wordcount") {
-    val dir = Files.createTempDirectory("graft_txt").toString
+    val dir = TestSpark.tempDir("graft_txt").toString
     Tables.documents(spark, sf).select($"text")
       .write.mode("overwrite").text(dir)
     val fromText = spark.read.text(dir)
@@ -177,7 +176,7 @@ class LayoutSpec extends AnyFunSuite {
   test("dynamic partition overwrite replaces only the targeted partition (q244 semantics)") {
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "lang", "source", "n_chars", "text")
-    val dir = Files.createTempDirectory("graft_backfill").toString
+    val dir = TestSpark.tempDir("graft_backfill").toString
     docs.write.mode("overwrite").partitionBy("lang").parquet(s"$dir/t")
     def files(l: String): Set[(String, Long, Long)] =
       Option(new java.io.File(s"$dir/t/lang=$l").listFiles()).getOrElse(Array())
@@ -209,7 +208,7 @@ class LayoutSpec extends AnyFunSuite {
       .select("doc_id", "lang", "n_chars")
     val rows = docs.count()
     val cap = 100L
-    val dir = Files.createTempDirectory("graft_filegov").toString
+    val dir = TestSpark.tempDir("graft_filegov").toString
     docs.repartition(4).write.mode("overwrite")
       .option("maxRecordsPerFile", cap).parquet(dir)
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array())

@@ -126,7 +126,7 @@ class OperatorUnitSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("pr_rank"),
         r.getAs[Long]("degree"))).toSeq
     val base = rows()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val dir = TestSpark.tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     assert(spark.sparkContext.getCheckpointDir.isDefined)
     val reliable = rows()
@@ -239,7 +239,7 @@ class OperatorUnitSpec extends AnyFunSuite {
     // query and both reported scores coincide. This pins the aggregate
     // wiring (codebook → encode → LUT → 4-hit sum) independent of the
     // fixture's noisy geometry, where recall is legitimately < 1.
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = TestSpark.tempDir("graft_pq").toString
     def vec(lbl: Int): Seq[Float] =
       (0 until 64).map(d => if (d % 4 == lbl % 4) 0.5f else -0.25f)
         .updated(lbl, 1.0f) // make labels distinguishable beyond the cycle
@@ -430,7 +430,7 @@ class OperatorUnitSpec extends AnyFunSuite {
     // pins the artifact parsing: latest round number wins, only the
     // `queries` object is read (never queries_raw/queries_loadavg), and
     // a missing/garbled file degrades to an empty map, not a crash.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_base").toFile
+    val dir = TestSpark.tempDir("graft_bench_base").toFile
     def write(name: String, body: String): Unit = {
       val w = new java.io.PrintWriter(new java.io.File(dir, name), "UTF-8")
       try w.print(body) finally w.close()
@@ -449,7 +449,7 @@ class OperatorUnitSpec extends AnyFunSuite {
     assert(Bench.selfBaseline(dir, Some("/data/sf0.01")).isEmpty,
       "a baseline from another scale factor must be IGNORED, not compared against")
     assert(Bench.selfBaseline(
-      java.nio.file.Files.createTempDirectory("graft_bench_empty").toFile).isEmpty)
+      TestSpark.tempDir("graft_bench_empty").toFile).isEmpty)
     write("BENCH_SELF_r18.json", "{\"queries\":{") // truncated artifact
     assert(Bench.selfBaseline(dir).isEmpty,
       "a truncated latest artifact must degrade to empty, never throw")

@@ -74,6 +74,11 @@ class PlanSpec extends AnyFunSuite {
     assert(lists.nonEmpty, "expected a collect_list window in the plan")
     assert(lists.forall(_.contains("windowspecdefinition(chunk")),
       s"the sliding window must be partitioned by day chunk:\n${lists.mkString("\n")}")
+    // its keyless distance join bands through RangeJoinRewrite
+    assert(p.contains("__graft_range_bin"),
+      "RangeJoinRewrite must fire on q74's range join")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      "q74's pairs must come from the bin equi-join, not an all-pairs scan")
   }
 
   test("q78: LSH-pruned pair top-k has no nested-loop pair scan") {
@@ -213,6 +218,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q230: NAIVE interval-overlap join is auto-banded (both sides explode)") {
+    // window lengths are data-dependent and no session carries a
+    // fallback width, so banding here proves the sampled-width path
     val p = plan("q230_overlap_incident_windows")
     assert(p.contains("__graft_range_bin_genl") &&
       p.contains("__graft_range_bin_genr"),

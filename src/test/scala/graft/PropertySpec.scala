@@ -151,7 +151,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   private lazy val genDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_genev").toString
+    val dir = TestSpark.tempDir("graft_genev").toString
     genEvents.map(e => (e._1, e._2, e._3, e._4, e._5,
         s"""{"k": ${(e._1 * 7) % 23}}"""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -262,7 +262,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   private lazy val genOrdersDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_genord").toString
+    val dir = TestSpark.tempDir("graft_genord").toString
     genOrders.map { case (ok, ck, price, day) =>
       (ok, ck, "O", price,
         java.sql.Timestamp.valueOf(
@@ -521,7 +521,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   private lazy val genStarDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_genstar").toString
+    val dir = TestSpark.tempDir("graft_genstar").toString
     genStarCustomers.toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     genStarOrders.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -921,7 +921,7 @@ class PropertySpec extends AnyFunSuite {
       (2L, "purchase"), (34L, "purchase"), (35L, "purchase"),
       (200L, "purchase"), (201L, "purchase"), // word 6 absent on click side
       (1L, "view"))                           // other types must not leak in
-    val dir = java.nio.file.Files.createTempDirectory("graft_genbmp").toString
+    val dir = TestSpark.tempDir("graft_genbmp").toString
     rows.zipWithIndex.map { case ((u, t), i) =>
       (i.toLong + 1, (i.toLong + 1) * 3600L * 1000000000L, u, t, 1.0)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -1089,7 +1089,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   private lazy val genPlantedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_genplant").toString
+    val dir = TestSpark.tempDir("graft_genplant").toString
     genPlanted._1.map { case (id, text) =>
       (id, text, "en", s"src${id % 3}", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

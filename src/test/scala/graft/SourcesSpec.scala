@@ -19,7 +19,7 @@ class SourcesSpec extends AnyFunSuite {
     StructField("event_type", StringType), StructField("value", DoubleType)))
 
   test("CSV round-trip with explicit schema preserves values") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = TestSpark.tempDir("graft_csv").toString
     val src = Tables.events(spark, sf)
       .select($"event_id", $"user_id", $"event_type", $"value")
     src.write.mode("overwrite").option("header", "true").csv(dir)
@@ -29,7 +29,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("JSON-lines round-trip with explicit schema preserves values") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = TestSpark.tempDir("graft_json").toString
     val src = Tables.events(spark, sf)
       .select($"event_id", $"user_id", $"event_type", $"value")
     src.write.mode("overwrite").json(dir)
@@ -39,7 +39,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip preserves values and types (columnar alternative to parquet)") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = TestSpark.tempDir("graft_orc").toString
     val src = Tables.events(spark, sf)
       .select($"event_id", $"user_id", $"event_type", $"value")
     src.write.mode("overwrite").orc(dir)
@@ -50,7 +50,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("PERMISSIVE JSON ingest isolates corrupt records instead of failing") {
-    val dir = Files.createTempDirectory("graft_dirty").toString
+    val dir = TestSpark.tempDir("graft_dirty").toString
     val lines = Seq(
       """{"event_id": 1, "user_id": 10, "event_type": "click", "value": 1.5}""",
       """{"event_id": 2, "user_id": 11, "event_type": "view"""", // truncated
@@ -75,7 +75,7 @@ class SourcesSpec extends AnyFunSuite {
     // v1 files carry 3 columns, v2 adds a fourth — the additive-evolution
     // case a long-lived corpus hits on every schema bump; mergeSchema
     // reconciles the footers and v1 rows surface NULL for the new column
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = TestSpark.tempDir("graft_evolve").toString
     Seq((1L, "click", 1.5)).toDF("event_id", "event_type", "value")
       .write.mode("append").parquet(dir)
     Seq((2L, "view", 2.5, "mobile"))
@@ -330,7 +330,7 @@ class SourcesSpec extends AnyFunSuite {
       """{"doc_id":3,"lang":"en","n_chars":5""",         // truncated: corrupt
       """{"doc_id":4,"lang":"fr","n_chars":9}"""
     ).toDF("value")
-    val dir = Files.createTempDirectory("graft_q263").toString
+    val dir = TestSpark.tempDir("graft_q263").toString
     lines.coalesce(1).write.mode("overwrite").text(dir)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("lang", StringType),
@@ -382,7 +382,7 @@ class SourcesSpec extends AnyFunSuite {
     // with every clean row intact; (c) never even be OPENED when a
     // partition predicate prunes its directory, so the strict read
     // succeeds without any recovery option.
-    val dir = Files.createTempDirectory("graft_q265").toString
+    val dir = TestSpark.tempDir("graft_q265").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").withColumn("pk", lit(0L))
       .write.partitionBy("pk").mode("overwrite").parquet(dir)
     Seq((3L, "c")).toDF("id", "v").withColumn("pk", lit(1L))

@@ -442,7 +442,7 @@ class StreamingSpec extends AnyFunSuite {
             Option(r.getAs[java.lang.Double]("baseline_mean")).map(_.doubleValue),
             Option(r.getAs[java.lang.Double]("z")).map(_.doubleValue),
             r.getAs[Int]("anomaly"))).toMap
-      def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+      def tmp(p: String) = TestSpark.tempDir(p).toString
       def launch(s: MemoryStream[Event], out: String, ck: String) =
         EventStream.dailyAnomalies(s.toDS())
           .writeStream.format("parquet")
@@ -517,8 +517,8 @@ class StreamingSpec extends AnyFunSuite {
     // against the same checkpoint — committed offsets mean batch 1 is
     // not re-emitted, restored dedup state means a replayed event_id is
     // still dropped, and the sink ends up exactly-once for every event.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val ckpt = TestSpark.tempDir("graft_ckpt").toString
+    val out = TestSpark.tempDir("graft_sink").toString
     val stream = MemoryStream[Event]
     def start() = EventStream.dedupEvents(stream.toDF())
       .writeStream.format("parquet")
@@ -543,24 +543,11 @@ class StreamingSpec extends AnyFunSuite {
     // forcing one micro-batch per file, new files picked up by a
     // running query — and that the result equals the batch formulation
     // over the union of the files.
-    import java.nio.file.{Files => JFiles, Path, StandardCopyOption}
+    import java.nio.file.{Files => JFiles, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    def tmp(tag: String): Path = {
-      val p = JFiles.createTempDirectory(tag)
-      // tiny (a few KB), but suites run many times per round — don't
-      // accumulate dead dirs in /tmp
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(del))
-          f.delete(); ()
-        }
-        del(p.toFile)
-      }))
-      p
-    }
-    val watched = tmp("graft_filestream_in")
-    val stage = tmp("graft_filestream_stage")
-    val ck = tmp("graft_filestream_ck")
+    val watched = TestSpark.tempDir("graft_filestream_in")
+    val stage = TestSpark.tempDir("graft_filestream_stage")
+    val ck = TestSpark.tempDir("graft_filestream_ck")
     val all = batch1 ++ batch2
     def publish(events: Seq[Event], name: String): Unit = {
       // file-source contract: files must APPEAR atomically in the

@@ -14,10 +14,6 @@ object TestSpark {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      // range-join banding default: engine time columns are epoch-µs,
-      // so variable-interval range joins band at 1 h out of the box
-      // (RangeJoinRewrite scaladoc; static-width shapes ignore this)
-      .config("spark.graft.rangeJoin.binSize", "3600000000")
       // ObjectHashAggregate (TypedImperativeAggregate: MinHash/SimHash
       // sketches) falls back to sort-based agg after 128 groups/partition
       // by default, serializing the sketch buffer per row. Session-level
@@ -35,12 +31,26 @@ object TestSpark {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        tempDir("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** A fresh directory under java.io.tmpdir, deleted with its contents
+    * when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    def delete(f: java.io.File): Unit = {
+      // a symlink is removed, never followed
+      if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+        Option(f.listFiles).foreach(_.foreach(delete))
+      f.delete(): Unit
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(p.toFile)))
+    p
+  }
 
   /** Runs `body` with `pairs` set on the shared session, then restores
     * each key's previous value (or unsets it). */
